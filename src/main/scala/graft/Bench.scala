@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
+import graft.core.Session
 
 /** Benchmark main — driver runs this per-round at sf0.1 → BENCH_r{N}.json.
   *
@@ -28,29 +28,14 @@ import org.apache.spark.sql.SparkSession
   *    safely under the driver's observed ≥39 min kill) sheds reps 3→1 past
   *    50% of budget and skips remaining queries entirely past 100%, recording
   *    them under a top-level `"skipped"` key. A skipped entry can only happen
-  *    where the old harness would have produced NO artifact at all.
+  *    where the old harness would have produced NO artifact at all;
+  *  - a query that throws is listed under a top-level `"failed"` key and left
+  *    out of `"queries"` and `"value"`.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // Validate: a non-numeric SPARK_GRAFT_CPUS must not crash session build
-    // (open since r15 ADVICE).
-    val cpus = sys.env
-      .get("SPARK_GRAFT_CPUS")
-      .flatMap(_.trim.toIntOption)
-      .filter(_ > 0)
-      .getOrElse(32)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // NOTE: driver heap for local mode comes from build.sbt javaOptions
-      // (SPARK_DRIVER_MEM env) — setting spark.driver.memory here would be a
-      // no-op once the JVM is already running.
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus)
 
     // Median-of-3 per query: single-shot timings on a shared machine have been
     // noise-dominated (same code swung 4 s → 352 s between rounds); the median
@@ -82,14 +67,16 @@ object Bench {
 
     val results = mutable.LinkedHashMap.empty[String, Double]
     val skipped = mutable.ArrayBuffer.empty[String]
+    val failed  = mutable.ArrayBuffer.empty[String]
 
     def assemble(): String = {
       val qs    = results.map { case (k, v) => s""""$k":${round3(v)}""" }.mkString("{", ",", "}")
       val total = round3(results.values.sum)
-      val sk =
-        if (skipped.isEmpty) ""
-        else skipped.map("\"" + _ + "\"").mkString(""","skipped":[""", ",", "]")
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir"$sk}"""
+      def names(key: String, ns: Seq[String]): String =
+        if (ns.isEmpty) ""
+        else ns.map("\"" + _ + "\"").mkString(s""","$key":[""", ",", "]")
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir"""" +
+        names("skipped", skipped.toSeq) + names("failed", failed.toSeq) + "}"
     }
     def writeLocal(): Unit =
       try Files.writeString(Paths.get(out), assemble() + "\n")
@@ -105,20 +92,26 @@ object Bench {
         System.err.println(f"[bench] SKIP $name (budget ${budgetS}s exhausted at ${elapsedS}%.1f s)")
       } else {
         spark.sparkContext.setJobDescription(s"bench:$name")
-        val times = (1 to repsNow).map { _ =>
-          val t0 = System.nanoTime()
-          try
+        // A query that throws goes under "failed", never into "queries": its
+        // time until the exception would read as a speed-up.
+        try {
+          val times = (1 to repsNow).map { _ =>
+            val t0 = System.nanoTime()
             // noop sink: eagerly computes every column of every row on the
             // executors, discards the result — guide §1.4's timed action.
             fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          catch { case e: Throwable => System.err.println(s"[bench] $name failed: $e") }
-          (System.nanoTime() - t0) / 1e9
-        }.sorted
-        val median = times(times.length / 2)
-        results(name) = median
-        System.err.println(
-          f"[bench] done $name median=$median%.3f s reps=$repsNow elapsed=$elapsedS%.1f s",
-        )
+            (System.nanoTime() - t0) / 1e9
+          }.sorted
+          val median = times(times.length / 2)
+          results(name) = median
+          System.err.println(
+            f"[bench] done $name median=$median%.3f s reps=$repsNow elapsed=$elapsedS%.1f s",
+          )
+        } catch {
+          case e: Throwable =>
+            failed += name
+            System.err.println(s"[bench] $name failed: $e")
+        }
       }
       // Incremental artifact: the on-disk JSON is complete and parseable after
       // every query, so a kill at any point loses at most the in-flight query.

@@ -1,5 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import graft.core.Session
 
 /** Fast-iteration timing entry point (see .claude/skills/verify/SKILL.md):
   * `runMain graft.IsoQ q1,q2 /root/testdata/sf0.01` prints `TIMING <name> <sec>`
@@ -20,16 +21,7 @@ object IsoQ {
       sys.exit(2)
     }
     val sfDir = args(1)
-    // Non-numeric SPARK_GRAFT_CPUS must not crash session build.
-    val cpus =
-      sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.trim.toIntOption).filter(_ > 0).getOrElse(8)
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus)
     for (name <- names) {
       if (sys.env.get("SPARK_GRAFT_EXPLAIN").contains("1")) {
         println(s"==== EXPLAIN $name ====")

@@ -1,44 +1,53 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+
+import graft.core.Session
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare
+  * (`python3 tools/check_oracle.py <sfDir> <outDir>`). Exits 1, naming each
+  * query that threw, if any did.
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // Optional 3rd arg: comma-separated query-name filter (local iteration).
     val only: Option[Set[String]] = args.lift(2).map(_.split(",").toSet)
-    // Non-numeric SPARK_GRAFT_CPUS must not crash session build.
-    val cpus =
-      sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.trim.toIntOption).filter(_ > 0).getOrElse(4)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet stores TIMESTAMP(NANOS); values are µs-clean (verified),
-      // so read as long and convert losslessly in Tables.events.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark  = Session.local(Session.cpus)
+    val failed = dump(spark, sfDir, outDir, name => only.forall(_.contains(name)))
+    spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} queries failed: ${failed.mkString(",")}")
+      sys.exit(1)
+    }
+  }
+
+  /** Writes each query `keep` selects to `outDir/<name>` as one parquet file,
+    * and their oracle SQL to `outDir/oracle_sql.json`.
+    *
+    * @return the names of the queries that threw, sorted
+    */
+  def dump(spark: SparkSession, sfDir: String, outDir: String, keep: String => Boolean): Seq[String] = {
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      // coalesce(1) is LOAD-BEARING for the order-sensitive oracle compare:
-      // several queries (q10, q16, q31–q35, q39, q40, q42, q43) carry their
-      // global output order as "range partitions are contiguous + rows are
-      // sorted within each partition" rather than a logical Sort, and
-      // coalesce concatenates partitions IN ORDER into the single output
-      // file. Replacing this with repartition(1) or a multi-file write would
-      // silently scramble that order and fail the hash compare.
-      // OrderContractSpec pins each rewritten query's order contract at the
-      // DataFrame level as a second guard.
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
+    val failed = SparkEntry.queries.toSeq.sortBy(_._1).filter { case (name, _) => keep(name) }.flatMap {
+      case (name, fn) =>
+        // coalesce(1) is LOAD-BEARING for the order-sensitive oracle compare:
+        // it concatenates partitions IN ORDER into the single output file.
+        // q16, q31–q33, q35, q39, q40, q42 and q43 carry their global output
+        // order as "range partitions are contiguous + rows are sorted within
+        // each partition" rather than a logical Sort, so replacing this with
+        // repartition(1) or a multi-file write would silently scramble that
+        // order and fail the hash compare. OrderContractSpec pins each such
+        // query's order contract at the DataFrame level as a second guard.
+        try {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+          None
+        } catch {
+          case e: Throwable =>
+            System.err.println(s"[verify] $name failed: ${e.getMessage}")
+            Some(name)
+        }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -53,9 +62,9 @@ object Verify {
       case c => c.toString
     } + "\""
     val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(_.contains(k)) }
+      .filter { case (k, _) => keep(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
+    failed
   }
 }

@@ -108,7 +108,6 @@ object DBSCAN {
       minWeight: Double,
       cellDeg: Double,
   ): DataFrame = {
-    val t0 = System.nanoTime()
     val n  = rows.length
     val id = new Array[Long](n)
     val xs = new Array[Double](n)
@@ -214,8 +213,6 @@ object DBSCAN {
       out(i) = (id(i), lbl)
       i += 1
     }
-    if (sys.env.contains("GRAFT_DEBUG"))
-      System.err.println(f"[dbscan] local path n=$n took ${(System.nanoTime() - t0) / 1e9}%.3f s")
     import spark.implicits._
     spark.createDataset(out.toIndexedSeq).toDF("id", "cluster_label")
   }
@@ -300,11 +297,8 @@ object DBSCAN {
       (spark.createDataFrame(r, labelSchema), r)
     }
 
-    val tInit               = System.nanoTime()
     var (labels, labelsRdd) = persistLabels(cores.select(col("id"), col("id").as("lbl")))
     var prevSum             = labels.agg(coalesce(sum(col("lbl")), lit(0L))).first().getLong(0)
-    if (sys.env.contains("GRAFT_DEBUG"))
-      System.err.println(f"[dbscan] init (edges+cores) took ${(System.nanoTime() - tInit) / 1e9}%.2f s")
     var iter = 0
     var done = false
     while (!done && iter < maxIter) {
@@ -324,10 +318,7 @@ object DBSCAN {
           .join(lut, col("lbl") === col("lid"), "left")
           .select(col("id"), coalesce(col("llbl"), col("lbl")).as("lbl")),
       )
-      val t0 = System.nanoTime()
       val s = updated.agg(coalesce(sum(col("lbl")), lit(0L))).first().getLong(0)
-      if (sys.env.contains("GRAFT_DEBUG"))
-        System.err.println(f"[dbscan] iter=$iter sum=$s took ${(System.nanoTime() - t0) / 1e9}%.2f s")
       done = s == prevSum
       prevSum = s
       labelsRdd.unpersist(false)
@@ -352,7 +343,6 @@ object DBSCAN {
       .groupBy(col("a").as("bid"))
       .agg(min(col("clbl")).as("blbl"))
 
-    val tOut = System.nanoTime()
     val out = p
       .join(clab.withColumnRenamed("id", "cid"), col("id") === col("cid"), "left")
       .join(border, col("id") === col("bid"), "left")
@@ -364,32 +354,8 @@ object DBSCAN {
       // p/edges/cores would otherwise leak executor memory across a 37-query
       // Bench/Verify session (round-2 advisory).
       .localCheckpoint(true)
-    if (sys.env.contains("GRAFT_DEBUG"))
-      System.err.println(f"[dbscan] border+final took ${(System.nanoTime() - tOut) / 1e9}%.2f s")
     Seq(p, edges, cores, coreEdges).foreach(_.unpersist(false))
     labelsRdd.unpersist(false)
     out
-  }
-
-  /** Reference eps sweep (`cluster_utils.py:41-42`): try eps values in order,
-    * return the first clustering with ≥ `minNClusters` clusters.
-    */
-  def clusterSweep(
-      points: DataFrame,
-      epsListKm: Seq[Double],
-      minWeight: Double,
-      cellDeg: Double,
-      minNClusters: Int = 1,
-  ): DataFrame = {
-    var result: DataFrame = null
-    val it                = epsListKm.iterator
-    var found             = false
-    while (!found && it.hasNext) {
-      val eps = it.next()
-      result = cluster(points, eps, minWeight, cellDeg)
-      val n = result.filter(col("cluster_label") =!= -1L).select(col("cluster_label")).distinct().count()
-      found = n >= minNClusters
-    }
-    result
   }
 }

@@ -15,17 +15,20 @@ import org.apache.spark.sql.functions._
   *  - density z(g) = Σᵢ wᵢ · exp(−½·(g−xᵢ)ᵀΣ⁻¹(g−xᵢ)) / (2π·√det Σ);
   *  - the LinAlgError → zeros fallback (`data_utils.py:177-189`) maps to the
   *    `valid` guard: fewer than 2 points, degenerate weights, or a singular
-  *    covariance yield z ≡ 0 instead of an error.
+  *    covariance yield z ≡ 0 instead of an error. Those inputs make 1 − Σw²
+  *    or det exactly 0, so the divisions by them are `try_divide` (null, not
+  *    an ANSI-mode DIVIDE_BY_ZERO error) and the guard then reads false.
   *
   * Execution shape (100 TB design): two passes of pure DataFrame algebra.
-  * Pass 1 is ONE global aggregate over UNNORMALIZED moments (map-side
-  * partial, one small result, broadcast back) — Σw, Σwx, Σwy, Σw², Σwxx,
-  * Σwxy, Σwyy and the count pin down the normalized mean, Σw²-degeneracy
-  * term and covariance algebraically (mx = Σwx/Σw, sw2 = Σw²/(Σw)², …), so
+  * Pass 1 is ONE aggregate, keyed by tag, over UNNORMALIZED moments
+  * (map-side partial, one small row per tag, broadcast back) — Σw, Σwx,
+  * Σwy, Σw², Σwxx, Σwxy, Σwyy and the count pin down the normalized mean,
+  * Σw²-degeneracy term and covariance algebraically (mx = Σwx/Σw,
+  * sw2 = Σw²/(Σw)², …), so
   * the separate "sum the weights first, then re-scan to normalize" pass the
   * r21 shape paid (an extra scan + weighting window + broadcast barrier on
   * the critical path) is gone. Pass 2 is points ⨯ broadcast(grid) with a
-  * map-side partial sum grouped by cell — the only shuffle moves
+  * map-side partial sum grouped by (tag, cell) — the only shuffle moves
   * ≤ nx·ny·partitions partial rows, never the data. No collect, no driver
   * math, whole-stage codegen throughout (exp/mul builtins only).
   */
@@ -83,42 +86,40 @@ object KDE {
     count(lit(1)).as("n"),
   )
 
-  /** Normalized covariance → inverse covariance + normalization constant,
-    * from the raw moments. Output keeps `sw` so the kernel pass can
+  /** Per-tag normalized covariance → inverse covariance + normalization
+    * constant, from the raw moments. Output keeps `sw` so the kernel pass can
     * normalize each point's weight (wn = w / sw) with the same broadcast.
     */
-  private def ivFrom(moments: DataFrame, bw: Double, keyCols: Seq[Column]): DataFrame = {
+  private def ivFrom(moments: DataFrame, bw: Double): DataFrame = {
     val f2 = bw * bw
     def covTerm(exy: Column, mu1: Column, mu2: Column): Column =
-      (exy - mu1 * mu2) / (lit(1.0) - col("sw2")) * lit(f2)
+      try_divide(exy - mu1 * mu2, lit(1.0) - col("sw2")) * lit(f2)
     moments
       .select(
-        keyCols ++ Seq(
-          col("n"),
-          col("sw"),
-          (col("sww") / (col("sw") * col("sw"))).as("sw2"),
-          (col("swx") / col("sw")).as("mx"),
-          (col("swy") / col("sw")).as("my"),
-          (col("swxx") / col("sw")).as("sxx"),
-          (col("swxy") / col("sw")).as("sxy"),
-          (col("swyy") / col("sw")).as("syy"),
-        ): _*,
+        col("tag"),
+        col("n"),
+        col("sw"),
+        (col("sww") / (col("sw") * col("sw"))).as("sw2"),
+        (col("swx") / col("sw")).as("mx"),
+        (col("swy") / col("sw")).as("my"),
+        (col("swxx") / col("sw")).as("sxx"),
+        (col("swxy") / col("sw")).as("sxy"),
+        (col("swyy") / col("sw")).as("syy"),
       )
       .select(
-        keyCols ++ Seq(
-          col("n"),
-          col("sw"),
-          col("sw2"),
-          covTerm(col("sxx"), col("mx"), col("mx")).as("kxx"),
-          covTerm(col("sxy"), col("mx"), col("my")).as("kxy"),
-          covTerm(col("syy"), col("my"), col("my")).as("kyy"),
-        ): _*,
+        col("tag"),
+        col("n"),
+        col("sw"),
+        col("sw2"),
+        covTerm(col("sxx"), col("mx"), col("mx")).as("kxx"),
+        covTerm(col("sxy"), col("mx"), col("my")).as("kxy"),
+        covTerm(col("syy"), col("my"), col("my")).as("kyy"),
       )
       .withColumn("det", col("kxx") * col("kyy") - col("kxy") * col("kxy"))
-      .withColumn("ixx", col("kyy") / col("det"))
-      .withColumn("iyy", col("kxx") / col("det"))
-      .withColumn("ixy", -col("kxy") / col("det"))
-      .withColumn("nc", lit(1.0) / (lit(2.0 * math.Pi) * sqrt(col("det"))))
+      .withColumn("ixx", try_divide(col("kyy"), col("det")))
+      .withColumn("iyy", try_divide(col("kxx"), col("det")))
+      .withColumn("ixy", try_divide(-col("kxy"), col("det")))
+      .withColumn("nc", try_divide(lit(1.0), lit(2.0 * math.Pi) * sqrt(col("det"))))
       .withColumn(
         "valid",
         col("n") >= 2 && col("sw2") < 1.0 && col("det") > 0.0,
@@ -131,37 +132,26 @@ object KDE {
     dxc * dxc * col("ixx") + lit(2.0) * dxc * dyc * col("ixy") + dyc * dyc * col("iyy")
   }
 
-  /** Per-cell weighted Gaussian KDE density.
+  /** Per-cell weighted Gaussian KDE density: [[densityByTag]] with every
+    * point under one tag.
     *
     * @param points columns `x`, `y`, `w` (raw weights, any positive scale)
     * @param gridDf columns `cell_x`, `cell_y`, `gx`, `gy` (small — broadcast)
     * @param bw     scipy `bw_method` scalar covariance factor
-    * @return `cell_x, cell_y, z` for every grid cell (z = 0 when degenerate)
+    * @return `cell_x, cell_y, z` for every grid cell (z = 0 when degenerate),
+    *         no rows when `points` is empty
     */
-  def density(points: DataFrame, gridDf: DataFrame, bw: Double): DataFrame = {
-    val iv = ivFrom(points.agg(momentAggs.head, momentAggs.tail: _*), bw, Seq.empty)
-    widened(points)
-      .crossJoin(broadcast(iv))
-      .select(col("x"), col("y"), (col("w") / col("sw")).as("wn"), col("ixx"), col("iyy"), col("ixy"), col("nc"), col("valid"))
-      .crossJoin(broadcast(gridDf))
-      .groupBy(col("cell_x"), col("cell_y"), col("valid"), col("nc"))
-      .agg(sum(col("wn") * exp(lit(-0.5) * quad)).as("s"))
-      .select(
-        col("cell_x"),
-        col("cell_y"),
-        when(col("valid"), col("s") * col("nc")).otherwise(lit(0.0)).as("z"),
-      )
-  }
+  def density(points: DataFrame, gridDf: DataFrame, bw: Double): DataFrame =
+    densityByTag(points.withColumn("tag", lit("")), gridDf, bw).drop("tag")
 
   /** Per-(tag, cell) weighted Gaussian KDE density for SEVERAL point sets in
-    * one pass, keyed by a `tag` column. Identical math to [[density]]
-    * applied independently per tag — the moment aggregate is keyed by `tag`
-    * and the per-tag scalars attach back via a broadcast hash join on `tag`
-    * instead of a 1-row cross join.
+    * one pass, keyed by a `tag` column: the math of the class doc applied
+    * independently per tag. The moment aggregate is keyed by `tag` and the
+    * per-tag scalars attach back via a broadcast hash join on `tag`.
     *
-    * Why it exists (guide §1.2/§2.4, r21 verdict item 2): q24 evaluates the
+    * Why one pass (guide §1.2/§2.4, r21 verdict item 2): q24 evaluates the
     * SAME events scan + decay-weight window for two disjoint time windows.
-    * As two [[density]] calls the subtrees differ (different filters), so
+    * As two separate densities the subtrees differ (different filters), so
     * nothing is reused and the scan + window exchange + grid⨯points kernel
     * pass all run twice. With the windows tagged in one DataFrame, the whole
     * input pipeline is one subtree: the scan runs once, the weighting window
@@ -175,7 +165,7 @@ object KDE {
     */
   def densityByTag(points: DataFrame, gridDf: DataFrame, bw: Double): DataFrame = {
     val iv =
-      ivFrom(points.groupBy(col("tag")).agg(momentAggs.head, momentAggs.tail: _*), bw, Seq(col("tag")))
+      ivFrom(points.groupBy(col("tag")).agg(momentAggs.head, momentAggs.tail: _*), bw)
     widened(points)
       .join(broadcast(iv), "tag")
       .select(col("tag"), col("x"), col("y"), (col("w") / col("sw")).as("wn"), col("ixx"), col("iyy"), col("ixy"), col("nc"), col("valid"))

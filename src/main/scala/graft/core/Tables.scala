@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Loaders for the driver-generated synthetic tables (see /root/repo/TESTDATA.md).
   *
@@ -48,9 +48,24 @@ object Tables {
     * below it anyway — and keeps compute-heavy stages wide at bench scale.
     * Scale-adaptive by construction: the bench contract sets this conf to
     * `$SPARK_GRAFT_CPUS`, production sets cluster parallelism (default 200).
+    *
+    * AQE neither coalesces nor skew-splits an exchange whose count is given,
+    * so the pinned exchanges run exactly this many partitions. With the conf
+    * unset that is the fallback of 200, and AQE skew splitting is off on them.
     */
   def shufflePartitions(s: SparkSession): Int =
     s.conf.getOption("spark.sql.shuffle.partitions").flatMap(_.toIntOption).getOrElse(200)
+
+  /** Range exchange of `df` on `keys` into [[shufflePartitions]] partitions —
+    * the one partition-and-order operator of every query that carries its
+    * global output order physically. Range partitions are contiguous and
+    * ordered by `keys`, so a `sortWithinPartitions` led by the same keys gives
+    * the global order with no further exchange, and the projections above
+    * keep it (OrderContractSpec pins each such query). The pinned count keeps
+    * the compute-heavy stages above the exchange wide.
+    */
+  def rangeClustered(df: DataFrame, keys: Column*): DataFrame =
+    df.repartitionByRange(shufflePartitions(df.sparkSession), keys: _*)
 }
 
 /** One externally-verifiable query: a Spark plan plus (optionally) equivalent

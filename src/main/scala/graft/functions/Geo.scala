@@ -32,22 +32,4 @@ object Geo {
     val a = pow(sin(dLat), 2) + cos(radians(lat1)) * cos(radians(lat2)) * pow(sin(dLon), 2)
     lit(2 * EarthRadiusKm) * asin(sqrt(a))
   }
-
-  /** Bbox min/max unpack (`data_utils.py:49-54`) for an
-    * `array<double>` [west, south, east, north] column.
-    */
-  def bboxWest(b: Column): Column  = b.getItem(0)
-  def bboxSouth(b: Column): Column = b.getItem(1)
-  def bboxEast(b: Column): Column  = b.getItem(2)
-  def bboxNorth(b: Column): Column = b.getItem(3)
-
-  /** Haversine height/width of a bbox in km (`data_utils.py:57-61`; the
-    * reference uses WGS-84 geodesic — haversine differs by ≲0.3%, documented
-    * per SURVEY §7.4.9; grid-dimension fixtures pin the delta).
-    */
-  def bboxDimsKm(west: Column, south: Column, east: Column, north: Column): (Column, Column) = {
-    val height = haversineKm(west, south, west, north)
-    val width  = haversineKm(west, south, east, south)
-    (height, width)
-  }
 }

@@ -149,7 +149,6 @@ object TopKIds {
       // find insertion position among the current n entries
       var pos = n
       while (pos > 0 && beats(s, i, scores(pos - 1), ids(pos - 1))) pos -= 1
-      if (pos >= k) return
       val last = math.min(n, k - 1) // index that shifting may write up to
       var j    = last
       while (j > pos) {

@@ -1,11 +1,12 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.analytics.{DBSCAN, KDE}
 import graft.core.{QuerySpec, Tables}
+import EventOps.{anchorSql, decayWeight, decayWeightSql, eventsWithAnchor, userRank, userRankSql}
+import GeoOps.{lat, latSql, lon, lonSql}
 
 /** The reference's analytical kernel re-expressed over the driver testdata:
   * weighted Gaussian KDE on a grid (A8/F5), current-vs-previous-window KDE
@@ -25,43 +26,18 @@ object AnalyticsOps {
   private val NY = 17
   private val BW = 0.3
 
-  /** Activity points in the window (anchor−hi, anchor−lo], weighted by
-    * per-user recency decay *within that window* (the reference weights each
-    * queried activity list independently, `data_utils.py:129-138`).
+  /** Activity points of the 48 h up to the anchor, tagged `c` (current,
+    * (anchor−24 h, anchor]) or `p` (previous, (anchor−48 h, anchor−24 h]),
+    * each weighted by per-user recency decay *within its own window* (the
+    * reference weights each queried activity list independently,
+    * `data_utils.py:129-138`): the decay rank partitions by (user_id, tag).
+    * q24 takes both windows from this one scan and one window exchange (guide
+    * §1.2: don't compute the same input twice). q23 filters it to tag `c`;
+    * the filter is on a window partition key, so the optimizer pushes it
+    * below the window into the anchor join and only the 24 h rows are ranked.
     */
-  private def points(s: SparkSession, d: String, loHours: Int, hiHours: Int): DataFrame = {
-    val ev     = Tables.events(s, d)
-    val anchor = ev.agg(max(col("ts")).as("anchor"))
-    ev.crossJoin(broadcast(anchor))
-      .filter(
-        col("ts") > col("anchor") - expr(s"INTERVAL $hiHours HOURS") &&
-          col("ts") <= col("anchor") - expr(s"INTERVAL $loHours HOURS"),
-      )
-      .withColumn("x", col("value") % 360.0 - 180.0)
-      .withColumn("y", (col("user_id") % 180 - 90).cast("double"))
-      .withColumn(
-        "rn",
-        row_number().over(Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))),
-      )
-      .select(
-        col("x"),
-        col("y"),
-        (lit(1.0) / exp((col("rn") - lit(1)) * lit(0.05))).as("w"),
-      )
-  }
-
-  /** Both of q24's activity windows from ONE scan: rows in (anchor−48 h,
-    * anchor], tagged `c` (current, (anchor−24, anchor]) or `p` (previous,
-    * (anchor−48, anchor−24]). The decay rank partitions by (user_id, tag), so
-    * each window ranks its own rows exactly as [[points]] does after its
-    * window filter — same rn, same weight, per tag. One scan + one window
-    * exchange replace the two of everything the per-window [[points]] pair
-    * cost (guide §1.2: don't compute the same input twice).
-    */
-  private def taggedPoints(s: SparkSession, d: String): DataFrame = {
-    val ev     = Tables.events(s, d)
-    val anchor = ev.agg(max(col("ts")).as("anchor"))
-    ev.crossJoin(broadcast(anchor))
+  private def taggedPoints(s: SparkSession, d: String): DataFrame =
+    eventsWithAnchor(s, d)
       .filter(
         col("ts") > col("anchor") - expr("INTERVAL 48 HOURS") &&
           col("ts") <= col("anchor"),
@@ -70,32 +46,26 @@ object AnalyticsOps {
         "tag",
         when(col("ts") > col("anchor") - expr("INTERVAL 24 HOURS"), lit("c")).otherwise(lit("p")),
       )
-      .withColumn("x", col("value") % 360.0 - 180.0)
-      .withColumn("y", (col("user_id") % 180 - 90).cast("double"))
-      .withColumn(
-        "rn",
-        row_number().over(
-          Window.partitionBy(col("user_id"), col("tag")).orderBy(col("ts"), col("event_id")),
-        ),
-      )
+      .withColumn("x", lon)
+      .withColumn("y", lat)
+      .withColumn("rn", userRank(col("tag")))
       .select(
         col("tag"),
         col("x"),
         col("y"),
-        (lit(1.0) / exp((col("rn") - lit(1)) * lit(0.05))).as("w"),
+        decayWeight(col("rn")).as("w"),
       )
-  }
 
   private def pointsSqlCte(tag: String, loHours: Int, hiHours: Int): String =
     s"""pts_$tag AS (
-       |  SELECT value % 360.0 - 180.0 AS x,
-       |         CAST(user_id % 180 - 90 AS DOUBLE) AS y,
-       |         1.0 / exp((row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) - 1) * 0.05) AS w
+       |  SELECT $lonSql AS x,
+       |         $latSql AS y,
+       |         ${decayWeightSql(userRankSql)} AS w
        |  FROM events
-       |  WHERE ts > (SELECT max(ts) FROM events) - INTERVAL $hiHours HOUR
-       |    AND ts <= (SELECT max(ts) FROM events) - INTERVAL $loHours HOUR)""".stripMargin
+       |  WHERE ts > $anchorSql - INTERVAL $hiHours HOUR
+       |    AND ts <= $anchorSql - INTERVAL $loHours HOUR)""".stripMargin
 
-  /** Mirrors [[KDE.density]] step for step; `tag` suffixes the CTE names so
+  /** Mirrors [[KDE.densityByTag]] for one tag step for step; `tag` suffixes the CTE names so
     * two densities can coexist in one oracle query.
     */
   private def densitySqlCtes(tag: String): String =
@@ -144,7 +114,7 @@ object AnalyticsOps {
     "q23_kde_density",
     (s, d) =>
       KDE
-        .density(points(s, d, 0, 24), gridDf(s), BW)
+        .densityByTag(taggedPoints(s, d).filter(col("tag") === "c"), gridDf(s), BW)
         .select(col("cell_x"), col("cell_y"), round(col("z") * lit(1000000.0), 4).as("z_ppm"))
         .orderBy(col("cell_x"), col("cell_y")),
     Some(s"""
@@ -226,34 +196,31 @@ object AnalyticsOps {
     (s, d) => {
       val pts = Tables
         .events(s, d)
-        .withColumn("x", col("value") % 360.0 - 180.0)
-        .withColumn("y", (col("user_id") % 180 - 90).cast("double"))
+        .withColumn("x", lon)
+        .withColumn("y", lat)
         .filter(col("x") >= -30.0 && col("x") <= 30.0 && col("y") >= -30.0 && col("y") <= 30.0)
-        .withColumn(
-          "rn",
-          row_number().over(Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))),
-        )
+        .withColumn("rn", userRank())
         .select(
           col("event_id").as("id"),
           col("x"),
           col("y"),
-          (lit(1.0) / exp((col("rn") - lit(1)) * lit(0.05))).as("w"),
+          decayWeight(col("rn")).as("w"),
         )
       DBSCAN
         .cluster(pts, epsKm = 300.0, minWeight = 3.0, cellDeg = 4.0)
         .select(col("id").as("event_id"), col("cluster_label"))
         .orderBy(col("event_id"))
     },
-    Some("""
+    Some(s"""
       WITH RECURSIVE
       bpts AS (
         SELECT event_id AS id, x, y,
-               1.0 / exp((row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) - 1) * 0.05) AS w,
+               ${decayWeightSql(userRankSql)} AS w,
                CAST(floor(x / 4.0) AS BIGINT) AS cx,
                CAST(floor(y / 4.0) AS BIGINT) AS cy
         FROM (SELECT event_id, user_id, ts,
-                     value % 360.0 - 180.0 AS x,
-                     CAST(user_id % 180 - 90 AS DOUBLE) AS y
+                     $lonSql AS x,
+                     $latSql AS y
               FROM events)
         WHERE x >= -30.0 AND x <= 30.0 AND y >= -30.0 AND y <= 30.0),
       edges AS (

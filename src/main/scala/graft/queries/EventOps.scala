@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -23,10 +23,31 @@ import graft.core.{QuerySpec, Tables}
   */
 object EventOps {
 
-  private def eventsWithAnchor(s: SparkSession, d: String): DataFrame = {
+  /** The events table with the window anchor — the newest row's `ts` — as
+    * column `anchor`, joined from a 1-row broadcast aggregate. [[anchorSql]]
+    * is the oracle's copy.
+    */
+  private[queries] def eventsWithAnchor(s: SparkSession, d: String): DataFrame = {
     val ev = Tables.events(s, d)
-    ev.crossJoin(broadcast(ev.agg(max(col("ts")).as("anchor_ts"))))
+    ev.crossJoin(broadcast(ev.agg(max(col("ts")).as("anchor"))))
   }
+  private[queries] val anchorSql = "(SELECT max(ts) FROM events)"
+
+  /** Per-user recency rank: 1 for each user's earliest row, by (ts,
+    * event_id), within every distinct (user_id, `keys`…) group.
+    */
+  private[queries] def userRank(keys: Column*): Column =
+    row_number().over(Window.partitionBy(col("user_id") +: keys: _*).orderBy(col("ts"), col("event_id")))
+
+  /** The oracle's [[userRank]] with no extra keys. */
+  private[queries] val userRankSql = "row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id)"
+
+  /** The reference's per-user decay weight of the row ranked `rank`
+    * (`data_utils.py:91-145`, factor 0.05): 1/exp((rank−1)·0.05), so each
+    * user's earliest row weighs 1.0. [[decayWeightSql]] is the oracle's copy.
+    */
+  private[queries] def decayWeight(rank: Column): Column = lit(1.0) / exp((rank - lit(1)) * lit(0.05))
+  private[queries] def decayWeightSql(rank: String): String = s"1.0 / exp(($rank - 1) * 0.05)"
 
   /** Q1/Q5: time-range scan + type-or-null filter + ORDER BY ts DESC
     * (`data_base.py:307-382, 90-116`).
@@ -46,16 +67,16 @@ object EventOps {
       // carries only the filtered window.
       eventsWithAnchor(s, d)
         .filter(
-          col("ts") >= col("anchor_ts") - expr("INTERVAL 24 HOURS") &&
+          col("ts") >= col("anchor") - expr("INTERVAL 24 HOURS") &&
             (col("event_type").isin("click", "view") || col("event_type").isNull),
         )
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
         .repartition(col("event_id"))
         .orderBy(col("ts").desc, col("event_id")),
-    Some("""
+    Some(s"""
       SELECT event_id, ts, user_id, event_type, value
       FROM events
-      WHERE ts >= (SELECT max(ts) FROM events) - INTERVAL 24 HOUR
+      WHERE ts >= $anchorSql - INTERVAL 24 HOUR
         AND (event_type IN ('click', 'view') OR event_type IS NULL)
       ORDER BY ts DESC, event_id
     """.stripMargin.trim),
@@ -66,14 +87,14 @@ object EventOps {
     "q11_count_events_window",
     (s, d) =>
       eventsWithAnchor(s, d)
-        .filter(col("ts") >= col("anchor_ts") - expr("INTERVAL 72 HOURS"))
+        .filter(col("ts") >= col("anchor") - expr("INTERVAL 72 HOURS"))
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"), round(sum(col("value")), 4).as("sum_value"))
         .orderBy(col("event_type")),
-    Some("""
+    Some(s"""
       SELECT event_type, count(*) AS n, round(sum(value), 4) AS sum_value
       FROM events
-      WHERE ts >= (SELECT max(ts) FROM events) - INTERVAL 72 HOUR
+      WHERE ts >= $anchorSql - INTERVAL 72 HOUR
       GROUP BY event_type
       ORDER BY event_type
     """.stripMargin.trim),
@@ -135,14 +156,14 @@ object EventOps {
     "q15_retention_cutoff",
     (s, d) =>
       eventsWithAnchor(s, d)
-        .filter(col("ts") >= col("anchor_ts") - expr("INTERVAL 7 DAYS"))
+        .filter(col("ts") >= col("anchor") - expr("INTERVAL 7 DAYS"))
         .groupBy(date_trunc("day", col("ts")).as("day"))
         .agg(count(lit(1)).as("n_kept"))
         .orderBy(col("day")),
-    Some("""
+    Some(s"""
       SELECT date_trunc('day', ts) AS day, count(*) AS n_kept
       FROM events
-      WHERE ts >= (SELECT max(ts) FROM events) - INTERVAL 7 DAY
+      WHERE ts >= $anchorSql - INTERVAL 7 DAY
       GROUP BY day
       ORDER BY day
     """.stripMargin.trim),
@@ -166,27 +187,25 @@ object EventOps {
     // orderBy(user_id, rn) exchange+sort disappears (guide §2.4: window keyed
     // like a neighboring operation shares one exchange).
     (s, d) => {
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
+      val ev = Tables.events(s, d).select(col("event_id"), col("ts"), col("user_id"))
+      // Pinned count so AQE cannot coalesce the range exchange to one
+      // partition and serialize the window (see Tables.shufflePartitions).
       Tables
-        .events(s, d)
-        .select(col("event_id"), col("ts"), col("user_id"))
-        // Explicit count so AQE cannot coalesce the range exchange to one
-        // partition and serialize the window (see Tables.shufflePartitions).
-        .repartitionByRange(Tables.shufflePartitions(s), col("user_id"))
+        .rangeClustered(ev, col("user_id"))
         .sortWithinPartitions(col("user_id"), col("ts"), col("event_id"))
-        .withColumn("rn", row_number().over(w))
+        .withColumn("rn", userRank())
         .select(
           col("event_id"),
           col("user_id"),
           col("rn"),
-          round(lit(1.0) / exp((col("rn") - lit(1)) * lit(0.05)), 6).as("weight"),
+          round(decayWeight(col("rn")), 6).as("weight"),
         )
     },
-    Some("""
+    Some(s"""
       SELECT event_id, user_id, rn,
-             round(1.0 / exp((rn - 1) * 0.05), 6) AS weight
+             round(${decayWeightSql("rn")}, 6) AS weight
       FROM (SELECT event_id, user_id,
-                   row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
+                   $userRankSql AS rn
             FROM events)
       ORDER BY user_id, rn
     """.stripMargin.trim),

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.core.{QuerySpec, Tables}
@@ -13,10 +14,15 @@ import graft.functions.Geo
   */
 object GeoOps {
 
-  // lon ∈ [-180, 180), lat ∈ [-90, 60] — plain arithmetic, bit-identical in
-  // Spark and DuckDB (both are IEEE fmod / integer mod on the same inputs).
-  private val lonExpr = col("value") % 360.0 - 180.0
-  private val latExpr = (col("user_id") % 180 - 90).cast("double")
+  /** An event's derived longitude and latitude, lon ∈ [-180, 180) and
+    * lat ∈ [-90, 60] — plain arithmetic, bit-identical in Spark and DuckDB
+    * (both are IEEE fmod / integer mod on the same inputs). [[lonSql]] and
+    * [[latSql]] are the oracle's copies.
+    */
+  private[graft] val lon: Column = col("value") % 360.0 - 180.0
+  private[graft] val lat: Column = (col("user_id") % 180 - 90).cast("double")
+  private[queries] val lonSql = "value % 360.0 - 180.0"
+  private[queries] val latSql = "CAST(user_id % 180 - 90 AS DOUBLE)"
 
   /** F2/P5: closed-bbox containment filter (`data_utils.py:43-46`) + count per
     * type. The bbox predicate is pure column arithmetic → pushed into the scan.
@@ -26,17 +32,17 @@ object GeoOps {
     (s, d) =>
       Tables
         .events(s, d)
-        .withColumn("lon", lonExpr)
-        .withColumn("lat", latExpr)
+        .withColumn("lon", lon)
+        .withColumn("lat", lat)
         .filter(Geo.inbounds(col("lon"), col("lat"), -50.0, -30.0, 50.0, 30.0))
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"))
         .orderBy(col("event_type")),
-    Some("""
+    Some(s"""
       SELECT event_type, count(*) AS n
       FROM (SELECT event_type,
-                   value % 360.0 - 180.0 AS lon,
-                   CAST(user_id % 180 - 90 AS DOUBLE) AS lat
+                   $lonSql AS lon,
+                   $latSql AS lat
             FROM events)
       WHERE lon >= -50.0 AND lon <= 50.0 AND lat >= -30.0 AND lat <= 30.0
       GROUP BY event_type
@@ -52,8 +58,8 @@ object GeoOps {
     (s, d) =>
       Tables
         .events(s, d)
-        .withColumn("lon", lonExpr)
-        .withColumn("lat", latExpr)
+        .withColumn("lon", lon)
+        .withColumn("lat", lat)
         .select(
           col("event_id"),
           round(Geo.haversineKm(lit(0.0), lit(0.0), col("lon"), col("lat")), 3)
@@ -61,15 +67,15 @@ object GeoOps {
         )
         .orderBy(col("event_id"))
         .limit(2000),
-    Some("""
+    Some(s"""
       SELECT event_id,
              round(2 * 6371.0088 * asin(sqrt(
                pow(sin(radians(lat - 0.0) / 2), 2) +
                cos(radians(0.0)) * cos(radians(lat)) *
                pow(sin(radians(lon - 0.0) / 2), 2))), 3) AS dist_km
       FROM (SELECT event_id,
-                   value % 360.0 - 180.0 AS lon,
-                   CAST(user_id % 180 - 90 AS DOUBLE) AS lat
+                   $lonSql AS lon,
+                   $latSql AS lat
             FROM events)
       ORDER BY event_id
       LIMIT 2000

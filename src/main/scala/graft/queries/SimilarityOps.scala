@@ -31,12 +31,15 @@ import org.apache.spark.sql.graftbridge.VectorFunctions.{vecDot, vecNorm}
   */
 object SimilarityOps {
 
-  /** vec_id, v (double[]), nrm — shared prep for every query below. */
-  private def normed(s: SparkSession, d: String): DataFrame =
-    Tables
-      .embeddings(s, d)
+  /** vec_id, label, v (double[]), nrm over an embeddings-shaped frame —
+    * shared prep for every query below.
+    */
+  private def normedOf(embeddings: DataFrame): DataFrame =
+    embeddings
       .select(col("vec_id"), col("label"), col("embedding").cast(ArrayType(DoubleType)).as("v"))
       .withColumn("nrm", vecNorm(col("v")))
+
+  private def normed(s: SparkSession, d: String): DataFrame = normedOf(Tables.embeddings(s, d))
 
   /** [[normed]] with a vec_id RANGE exchange on the raw scan, for the
     * brute-force pair queries' STREAMED side. Two jobs at once (guide §2.6 +
@@ -51,17 +54,12 @@ object SimilarityOps {
     * quadratic stage. The sampling pass for this exchange re-runs only the
     * narrow scan below it (the norm projection sits above).
     */
-  private def normedRanged(s: SparkSession, d: String): DataFrame = {
-    // Explicit partition count: without it AQE sees a ~1 MB shuffle,
+  private def normedRanged(s: SparkSession, d: String): DataFrame =
+    // Pinned partition count: without it AQE sees a ~1 MB shuffle,
     // coalesces the range exchange to ONE partition by byte size, and the
     // O(n²) downstream stage runs serial again — byte-based coalescing is
     // blind to compute-heavy downstreams (see Tables.shufflePartitions).
-    Tables
-      .embeddings(s, d)
-      .repartitionByRange(Tables.shufflePartitions(s), col("vec_id"))
-      .select(col("vec_id"), col("label"), col("embedding").cast(ArrayType(DoubleType)).as("v"))
-      .withColumn("nrm", vecNorm(col("v")))
-  }
+    normedOf(Tables.rangeClustered(Tables.embeddings(s, d), col("vec_id")))
 
   private val normedSqlCte =
     """normed AS (
@@ -80,15 +78,11 @@ object SimilarityOps {
     // projection — a trailing orderBy would make the range partitioner's
     // sampling pass compute every norm twice (guide §2.4).
     (s, d) =>
-      Tables
-        .embeddings(s, d)
-        .repartitionByRange(Tables.shufflePartitions(s), col("vec_id"))
-        .sortWithinPartitions("vec_id")
-        .select(col("vec_id"), col("embedding").cast(ArrayType(DoubleType)).as("v"))
+      normedOf(Tables.rangeClustered(Tables.embeddings(s, d), col("vec_id")).sortWithinPartitions("vec_id"))
         .select(
           col("vec_id"),
           size(col("v")).cast("long").as("dim"),
-          round(vecNorm(col("v")), 4).as("l2_norm"),
+          round(col("nrm"), 4).as("l2_norm"),
         ),
     Some(s"""
       WITH $normedSqlCte

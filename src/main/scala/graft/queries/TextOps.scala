@@ -64,14 +64,11 @@ object TextOps {
     * for one execution of the projection and zero extra exchanges.
     */
   private def docsByIdSorted(s: SparkSession, d: String): DataFrame =
-    Tables
-      .documents(s, d)
-      // Explicit partition count: without it AQE coalesces this small range
-      // shuffle to ONE partition and every projection above it (q31/q32's
-      // regex batteries, q33's md5, q39's double tokenization) runs serial —
-      // see Tables.shufflePartitions.
-      .repartitionByRange(Tables.shufflePartitions(s), col("doc_id"))
-      .sortWithinPartitions("doc_id")
+    // Pinned partition count: without it AQE coalesces this small range
+    // shuffle to ONE partition and every projection above it (q31/q32's
+    // regex batteries, q33's md5, q35's signature, q39's double tokenization)
+    // runs serial — see Tables.shufflePartitions.
+    Tables.rangeClustered(Tables.documents(s, d), col("doc_id")).sortWithinPartitions("doc_id")
 
   /** Per-doc DISTINCT shingle set carried as one array column, over any
     * documents-shaped frame. `array_distinct` dedups inside the row, so the
@@ -97,9 +94,6 @@ object TextOps {
       // referenced more than once).
       .select(col("doc_id"), toks.as("toks"))
       .select(col("doc_id"), array_distinct(shingles(col("toks"))).as("shs"))
-
-  private def docShingleSets(s: SparkSession, d: String): DataFrame =
-    shingleSetsOf(Tables.documents(s, d))
 
   /** One MinHash slot computed inside the row: min over the shingle array of
     * md5(shingle ⊕ seed). No explode, no groupBy — the signature is per-row
@@ -285,8 +279,8 @@ object TextOps {
     * shingle set — zero shuffles end to end (scan → project). The DuckDB
     * oracle keeps the equivalent explode+GROUP BY formulation.
     */
-  private def minhashSig(s: SparkSession, d: String): DataFrame =
-    docShingleSets(s, d).select(
+  private def minhashSig(docs: DataFrame): DataFrame =
+    shingleSetsOf(docs).select(
       col("doc_id") +: (0 until MinhashSlots).map(i => mhSlot(col("shs"), i).as(s"mh$i")): _*,
     )
 
@@ -295,33 +289,15 @@ object TextOps {
 
   val qMinhashSig: QuerySpec = QuerySpec(
     "q35_minhash_signature",
-    // Global doc_id order is established on the narrow scan output BEFORE the
-    // signature projection. The previous `minhashSig(..).orderBy(doc_id)` put
-    // the 8×md5 shingle algebra BELOW the range exchange, so the partitioner's
-    // sampling pass executed the whole signature twice per run — the r18
-    // "q35 warm 41.8 s vs superset q36 7.1 s" anomaly. Same rows, same order
-    // (range partitions are contiguous; projections preserve row order), one
-    // signature execution.
-    (s, d) => {
-      // Same shingle pipeline as q36/q37 (shingleSetsOf), applied to a
-      // range-exchanged frame: the rlike gate pushes below the exchange to
-      // the scan, so the physical shape is scan+filter → range exchange →
-      // in-partition sort → tokenize/shingle/signature projections — one
-      // execution of the signature, global doc_id order from the one
-      // exchange.
-      // Explicit count for the same reason as docsByIdSorted: an AQE-coalesced
-      // single partition would run the 8×md5-per-shingle signature serially
-      // (measured ~1.2 s of q35's 1.6 s at bench scale).
-      val sorted = shingleSetsOf(
-        Tables
-          .documents(s, d)
-          .repartitionByRange(Tables.shufflePartitions(s), col("doc_id"))
-          .sortWithinPartitions("doc_id"),
-      )
-      sorted.select(
-        col("doc_id") +: (0 until MinhashSlots).map(i => mhSlot(col("shs"), i).as(s"mh$i")): _*,
-      )
-    },
+    // Global doc_id order comes from docsByIdSorted's range exchange on the
+    // narrow scan, BELOW the signature projection: an orderBy above it would
+    // make the range partitioner's sampling pass execute the 8×md5 signature
+    // twice per run (the r18 "q35 warm 41.8 s vs superset q36 7.1 s"
+    // anomaly). The shingle pipeline's rlike gate pushes below the exchange
+    // to the scan. The pinned count matters most here: an AQE-coalesced
+    // single partition would run the signature serially (measured ~1.2 s of
+    // q35's 1.6 s at bench scale).
+    (s, d) => minhashSig(docsByIdSorted(s, d)),
     Some(s"""
       WITH $shingleSqlCte
       SELECT doc_id,
@@ -347,7 +323,7 @@ object TextOps {
       // every banded row — an OOM at scale); the explicit `shuffle_hash` hint
       // forces a ShuffledHashJoin on the uniform (band,bucket) key instead,
       // and the two identical child subplans collapse via ReuseExchange.
-      val sig = minhashSig(s, d)
+      val sig = minhashSig(Tables.documents(s, d))
       val bandStructs = (0 until MinhashBands).map { bi =>
         val rows = (0 until RowsPerBand).map(r => col(s"mh${bi * RowsPerBand + r}"))
         struct(lit(bi).as("band"), md5(concat(rows: _*).cast("binary")).as("bucket"))
@@ -409,11 +385,11 @@ object TextOps {
       // `size(shs) > 0 AND isnotnull(shs)` filters (InferFiltersFromGenerate)
       // and push them through the projection, re-evaluating the whole
       // tokenize→shingle pipeline two more times per row inside the scan
-      // filter. The rlike in docShingleSets already guarantees non-empty
+      // filter. The rlike in shingleSetsOf already guarantees non-empty
       // shingle sets, so outer semantics are identical; the isNotNull below
       // only drops the (never-occurring) null rows and keeps the join key
       // non-null.
-      val ds = docShingleSets(s, d)
+      val ds = shingleSetsOf(Tables.documents(s, d))
         .select(col("doc_id"), size(col("shs")).as("n"), explode_outer(col("shs")).as("sh"))
         .filter(col("sh").isNotNull)
         .select(col("doc_id"), col("n"), xxhash64(col("sh")).as("sh"))

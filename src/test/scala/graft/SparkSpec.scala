@@ -1,30 +1,19 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.core.Session
 
 /** Shared single-JVM SparkSession for all suites (sbt forks one test JVM;
   * `getOrCreate` hands every suite the same session, so the fixture cost is
-  * paid once). Config mirrors Bench/Verify so a plan that passes here runs
-  * identically under the driver's gates.
+  * paid once). Built by the same factory as Bench/Verify, at a fixed 4 cores,
+  * so a plan that passes here runs identically under the driver's gates.
   */
-trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
+trait SparkSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .getOrCreate()
+  lazy val spark: SparkSession = Session.local(4)
 
   /** Smallest driver-generated scale factor — smoke data for plan-level tests. */
   val sfDir = "/root/testdata/sf0.001"
-
-  override protected def beforeAll(): Unit = {
-    super.beforeAll()
-    spark.sparkContext.setLogLevel("WARN")
-  }
 }

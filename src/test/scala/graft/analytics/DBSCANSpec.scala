@@ -4,6 +4,7 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.queries.GeoOps
 
 /** The DBSCAN contract has two physical paths (driver-local union-find vs
   * distributed hash-min propagation) behind one logical definition; these
@@ -71,14 +72,26 @@ class DBSCANSpec extends SparkSpec {
       val labels = run(pts, eps = 300.0, minW = 2.0, forceDistributed = distributed)
       assert(labels.values.toSet == Set(100L))
     }
+
+    test(s"$tag: empty input gives no rows") {
+      assert(run(Seq.empty, eps = 300.0, minW = 3.0, forceDistributed = distributed).isEmpty)
+    }
+
+    test(s"$tag: all-noise input labels every point -1") {
+      // Three points thousands of km apart: no point has an eps-neighbor, so
+      // no neighborhood reaches minW and there are no cores at all.
+      val pts = Seq((1L, 0.0, 0.0, 1.0), (2L, 60.0, 0.0, 1.0), (3L, -60.0, 40.0, 1.0))
+      assert(run(pts, eps = 300.0, minW = 3.0, forceDistributed = distributed) ==
+        Map(1L -> -1L, 2L -> -1L, 3L -> -1L))
+    }
   }
 
   test("local and distributed paths agree bit-for-bit on events testdata") {
     // sf0.001 has zero events inside the q25 bbox; sf0.01 has ~139.
     val pts = graft.core.Tables
       .events(spark, "/root/testdata/sf0.01")
-      .withColumn("x", col("value") % 360.0 - 180.0)
-      .withColumn("y", (col("user_id") % 180 - 90).cast("double"))
+      .withColumn("x", GeoOps.lon)
+      .withColumn("y", GeoOps.lat)
       .filter(col("x") >= -30.0 && col("x") <= 30.0 && col("y") >= -30.0 && col("y") <= 30.0)
       .select(col("event_id").as("id"), col("x"), col("y"), lit(1.0).as("w"))
     val local = DBSCAN.cluster(pts, 300.0, 3.0, 4.0).collect().map(r => (r.getLong(0), r.getLong(1))).toMap
