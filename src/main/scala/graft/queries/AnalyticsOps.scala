@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.analytics.{DBSCAN, KDE}
 import graft.core.{QuerySpec, Tables}
+import graft.functions.Geo
 import EventOps.{anchorSql, decayWeight, decayWeightSql, eventsWithAnchor, userRank, userRankSql}
 import GeoOps.{lat, latSql, lon, lonSql}
 
@@ -198,7 +199,7 @@ object AnalyticsOps {
         .events(s, d)
         .withColumn("x", lon)
         .withColumn("y", lat)
-        .filter(col("x") >= -30.0 && col("x") <= 30.0 && col("y") >= -30.0 && col("y") <= 30.0)
+        .filter(Geo.inbounds(col("x"), col("y"), -30.0, -30.0, 30.0, 30.0))
         .withColumn("rn", userRank())
         .select(
           col("event_id").as("id"),

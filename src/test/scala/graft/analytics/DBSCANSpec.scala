@@ -1,15 +1,20 @@
 package graft.analytics
 
-import org.apache.spark.sql.Row
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.TestListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, Prop, Test => Check}
 
 import graft.SparkSpec
 import graft.queries.GeoOps
 
-/** The DBSCAN contract has two physical paths (driver-local union-find vs
-  * distributed hash-min propagation) behind one logical definition; these
-  * suites pin (1) the semantics on hand-built geometries and (2) bit-identical
-  * agreement between the two paths on real testdata.
+/** DBSCAN runs one kernel in two placements (once on the driver, or per cell
+  * block on the executors with a merge of the blocks' components); these
+  * suites pin (1) the semantics on hand-built geometries, (2) bit-identical
+  * agreement between the placements on real testdata and on random point
+  * sets, and (3) a distributed job count that does not grow with the data.
   */
 class DBSCANSpec extends SparkSpec {
 
@@ -25,6 +30,9 @@ class DBSCANSpec extends SparkSpec {
       .collect()
       .map(r => r.getLong(0) -> r.getLong(1))
       .toMap
+
+  /** `n` points spaced 2.5° along the equator, ids from 100. */
+  private def chain(n: Int) = (0 until n).map(i => (100L + i, i * 2.5, 0.0, 1.0))
 
   for (distributed <- Seq(false, true)) {
     val tag = if (distributed) "distributed" else "local"
@@ -67,9 +75,8 @@ class DBSCANSpec extends SparkSpec {
     test(s"$tag: chain across cell boundaries stays one component") {
       // 12 points spaced 2.5° along the equator: consecutive ones are inside
       // eps=300 km, the chain spans many 4° cells — exercises 3×3 probing and
-      // (distributed) multi-round pointer jumping.
-      val pts    = (0 until 12).map(i => (100L + i, i * 2.5, 0.0, 1.0))
-      val labels = run(pts, eps = 300.0, minW = 2.0, forceDistributed = distributed)
+      // (distributed) the merge of components across block boundaries.
+      val labels = run(chain(12), eps = 300.0, minW = 2.0, forceDistributed = distributed)
       assert(labels.values.toSet == Set(100L))
     }
 
@@ -102,5 +109,49 @@ class DBSCANSpec extends SparkSpec {
       .toMap
     assert(local.nonEmpty)
     assert(local == dist)
+  }
+
+  test("local and distributed paths agree on random point sets") {
+    // Points in [-10°, 10°]² span 6 cells of 4° on both axes around cell 0;
+    // some repeat an earlier point's coordinates and weight, and a chain of
+    // 2.5° steps crosses several block boundaries at a random latitude.
+    val point = for {
+      x <- Gen.choose(-10.0, 10.0); y <- Gen.choose(-10.0, 10.0); w <- Gen.choose(0.1, 2.0)
+    } yield (x, y, w)
+    val cases = for {
+      free  <- Gen.choose(5, 40).flatMap(Gen.listOfN(_, point))
+      dups  <- Gen.choose(0, 8).flatMap(Gen.listOfN(_, Gen.choose(0, free.size - 1)))
+      links <- Gen.choose(0, 8)
+      lat   <- Gen.choose(-8.0, 8.0)
+      cw    <- Gen.choose(0.5, 2.0)
+      minW  <- Gen.choose(1.0, 4.0)
+      perm  <- Gen.pick(free.size + dups.size + links, 1L to 1000L)
+    } yield {
+      val xyw = free ++ dups.map(free) ++ (0 until links).map(i => (-9.0 + i * 2.5, lat, cw))
+      (perm.zip(xyw).map { case (id, (x, y, w)) => (id, x, y, w) }.toSeq, minW)
+    }
+    val prop = Prop.forAllNoShrink(cases) { case (pts, minW) =>
+      run(pts, 300.0, minW, forceDistributed = false) == run(pts, 300.0, minW, forceDistributed = true)
+    }
+    val result = Check.check(Check.Parameters.default.withMinSuccessfulTests(15).withWorkers(1), prop)
+    assert(result.passed, result.status)
+  }
+
+  test("distributed: the job count does not grow with the chain length") {
+    val sc = spark.sparkContext
+    def jobs(n: Int): Int = {
+      val started = new AtomicInteger
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = started.incrementAndGet()
+      }
+      TestListenerBus.drain(sc)
+      sc.addSparkListener(listener)
+      try {
+        assert(run(chain(n), eps = 300.0, minW = 2.0, forceDistributed = true).values.toSet == Set(100L))
+        TestListenerBus.drain(sc)
+        started.get
+      } finally sc.removeSparkListener(listener)
+    }
+    assert(jobs(12) == jobs(60))
   }
 }
