@@ -13,8 +13,8 @@ object Session {
       .getOrElse(Runtime.getRuntime.availableProcessors)
 
   /** `local[cpus]` with `cpus` shuffle partitions (the pinned exchange count,
-    * see [[Tables.shufflePartitions]]), UTC session time, no UI, and the
-    * TIMESTAMP(NANOS) of `events.parquet` read as long for [[Tables.events]].
+    * see [[Tables.shufflePartitions]]), UTC session time, no UI, and a
+    * TIMESTAMP(NANOS) `ts` (FIXTURES.md) read as long for [[Tables.events]].
     * The driver heap comes from the JVM flags (build.sbt `javaOptions`).
     */
   def local(cpus: Int): SparkSession = {

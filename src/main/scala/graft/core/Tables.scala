@@ -1,16 +1,33 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import java.util.concurrent.ConcurrentHashMap
 
-/** Loaders for the driver-generated synthetic tables (see /root/repo/TESTDATA.md).
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{expr, timestamp_micros}
+import org.apache.spark.sql.types.{LongType, StructType}
+
+/** Loaders for the generated synthetic tables (see TESTDATA.md).
   *
   * Every query receives the scale-factor directory at call time so the same plan
   * runs unchanged from sf0.001 smoke to a 100 TB lake — the parquet scan is the
   * only scale-dependent node and Catalyst handles pushdown/pruning per scan.
+  *
+  * Schemas are registered as in a metastore: one per session and path,
+  * inferred by the first handle (one job over the parquet footers) and fixed
+  * for the session's life, so later handles launch no job. The session is in
+  * the key because inferred types follow its confs (`nanosAsLong`). The file
+  * listing runs per handle, so appended files are read by the next one.
   */
 object Tables {
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  private val schemas = new ConcurrentHashMap[(SparkSession, String), StructType]()
+
+  private[core] def schema(spark: SparkSession, path: String): StructType =
+    schemas.computeIfAbsent((spark, path), _ => spark.read.parquet(path).schema)
+
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    spark.read.schema(schema(spark, path)).parquet(path)
+  }
 
   def lineitem(s: SparkSession, d: String): DataFrame   = table(s, d, "lineitem")
   def orders(s: SparkSession, d: String): DataFrame     = table(s, d, "orders")
@@ -19,18 +36,16 @@ object Tables {
   def nation(s: SparkSession, d: String): DataFrame     = table(s, d, "nation")
   def region(s: SparkSession, d: String): DataFrame     = table(s, d, "region")
   def part(s: SparkSession, d: String): DataFrame       = table(s, d, "part")
-  /** The events table stores `ts` as parquet TIMESTAMP(NANOS), which Spark's
-    * vectorized reader rejects; with `spark.sql.legacy.parquet.nanosAsLong` the
-    * column arrives as nano-epoch Long and is converted losslessly here (driver
-    * data is µs-clean — every value has ns%1000==0).
+  /** `ts` as a timestamp. The local sf dirs store TIMESTAMP_MICROS, returned
+    * as is. FIXTURES.md's TIMESTAMP(NANOS) layout, which the vectorized reader
+    * rejects, arrives under `nanosAsLong` as a nano-epoch Long (the registered
+    * schema's type) and is converted losslessly for µs-clean data.
     */
   def events(s: SparkSession, d: String): DataFrame = {
     val raw = table(s, d, "events")
     raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        raw.withColumn("ts", org.apache.spark.sql.functions.timestamp_micros(
-          org.apache.spark.sql.functions.expr("ts div 1000")))
-      case _ => raw
+      case LongType => raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
+      case _        => raw
     }
   }
   def documents(s: SparkSession, d: String): DataFrame  = table(s, d, "documents")

@@ -90,6 +90,9 @@ object EventOps {
         .filter(col("ts") >= col("anchor") - expr("INTERVAL 72 HOURS"))
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"), round(sum(col("value")), 4).as("sum_value"))
+        // One row per event_type at any scale: sorted in one partition, with
+        // no range exchange and no sampling job.
+        .coalesce(1)
         .orderBy(col("event_type")),
     Some(s"""
       SELECT event_type, count(*) AS n, round(sum(value), 4) AS sum_value
@@ -159,6 +162,9 @@ object EventOps {
         .filter(col("ts") >= col("anchor") - expr("INTERVAL 7 DAYS"))
         .groupBy(date_trunc("day", col("ts")).as("day"))
         .agg(count(lit(1)).as("n_kept"))
+        // At most 8 days in a 7-day window at any scale: sorted in one
+        // partition, with no range exchange and no sampling job.
+        .coalesce(1)
         .orderBy(col("day")),
     Some(s"""
       SELECT date_trunc('day', ts) AS day, count(*) AS n_kept

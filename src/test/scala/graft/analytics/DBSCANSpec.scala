@@ -1,9 +1,6 @@
 package graft.analytics
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.TestListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => Check}
 
@@ -138,19 +135,8 @@ class DBSCANSpec extends SparkSpec {
   }
 
   test("distributed: the job count does not grow with the chain length") {
-    val sc = spark.sparkContext
-    def jobs(n: Int): Int = {
-      val started = new AtomicInteger
-      val listener = new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit = started.incrementAndGet()
-      }
-      TestListenerBus.drain(sc)
-      sc.addSparkListener(listener)
-      try {
-        assert(run(chain(n), eps = 300.0, minW = 2.0, forceDistributed = true).values.toSet == Set(100L))
-        TestListenerBus.drain(sc)
-        started.get
-      } finally sc.removeSparkListener(listener)
+    def jobs(n: Int): Int = TestListenerBus.jobs(spark.sparkContext) {
+      assert(run(chain(n), eps = 300.0, minW = 2.0, forceDistributed = true).values.toSet == Set(100L))
     }
     assert(jobs(12) == jobs(60))
   }

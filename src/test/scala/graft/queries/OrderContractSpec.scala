@@ -1,6 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 
 import graft.SparkSpec
 import graft.SparkEntry
@@ -17,8 +20,12 @@ import graft.SparkEntry
   * Uses sf0.01 rather than the smallest SF so multi-row, multi-partition
   * shapes are actually exercised (sf0.001 leaves several outputs at 0–1
   * rows).
+  *
+  * It also pins the exchanges behind the order: the bounded outputs sorted
+  * in one partition carry no range exchange, and a pinned range exchange
+  * takes its partition count from the session conf.
   */
-class OrderContractSpec extends SparkSpec {
+class OrderContractSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private val sf = "/root/testdata/sf0.01"
 
@@ -69,4 +76,29 @@ class OrderContractSpec extends SparkSpec {
       }.take(3).toList
       assert(violations.isEmpty, s"$name order violations (index, prev, next): $violations")
     }
+
+  /** The partition counts of the range exchanges in `df`'s executed plan,
+    * after it ran (the final adaptive plan).
+    */
+  private def rangeExchanges(df: DataFrame): Seq[Int] = {
+    df.collect()
+    collect(df.queryExecution.executedPlan) {
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] =>
+        e.outputPartitioning.numPartitions
+    }
+  }
+
+  test("q11 and q15 sort their bounded outputs in one partition, with no range exchange") {
+    for (name <- Seq("q11_count_events_window", "q15_retention_cutoff"))
+      assert(rangeExchanges(SparkEntry.queries(name)(spark, sf)).isEmpty, name)
+  }
+
+  test("q16's pinned range exchange takes the session's shuffle partition count") {
+    // A new session, so the conf shared by every suite stays as it is.
+    val s7 = spark.newSession()
+    s7.conf.set("spark.sql.shuffle.partitions", "7")
+    val df = SparkEntry.queries("q16_user_activity_decay")(s7, sf)
+    assert(rangeExchanges(df) == Seq(7))
+    assert(df.queryExecution.toRdd.getNumPartitions == 7)
+  }
 }
