@@ -57,10 +57,10 @@ object Tables {
     * the exchange by byte size — and on small inputs that is ONE partition,
     * which serializes every projection/computation sitting above the
     * exchange (measured in r22: q35's interpreted-HOF MinHash signature and
-    * the O(n²)/kernel stages of q42/q43/q23/q24 all collapsed to a single
-    * task this way). Pinning the session's configured parallelism is a
-    * no-op at real scale — a large shuffle would not have been coalesced
-    * below it anyway — and keeps compute-heavy stages wide at bench scale.
+    * the O(n²) stages of q42/q43 all collapsed to a single task this way).
+    * Pinning the session's configured parallelism is a no-op at real scale
+    * — a large shuffle would not have been coalesced below it anyway — and
+    * keeps compute-heavy stages wide at bench scale.
     * Scale-adaptive by construction: the bench contract sets this conf to
     * `$SPARK_GRAFT_CPUS`, production sets cluster parallelism (default 200).
     *

@@ -66,8 +66,10 @@ object AnalyticsOps {
        |  WHERE ts > $anchorSql - INTERVAL $hiHours HOUR
        |    AND ts <= $anchorSql - INTERVAL $loHours HOUR)""".stripMargin
 
-  /** Mirrors [[KDE.densityByTag]] for one tag step for step; `tag` suffixes the CTE names so
-    * two densities can coexist in one oracle query.
+  /** The KDE of one tag in SQL: the same moments and the same per-cell sums
+    * as [[KDE.densityByTag]], computed as a points ⨯ grid cross join grouped
+    * by cell. `tag` suffixes the CTE names so two densities can coexist in one
+    * oracle query.
     */
   private def densitySqlCtes(tag: String): String =
     s"""sw_$tag AS (SELECT sum(w) AS sw FROM pts_$tag),
@@ -104,8 +106,7 @@ object AnalyticsOps {
        |                90.0 - gy.j * (180.0 / ${NY - 1}) AS gy
        |         FROM range(0, $NX) gx(i) CROSS JOIN range(0, $NY) gy(j))""".stripMargin
 
-  private def gridDf(s: SparkSession): DataFrame =
-    KDE.grid(s, -180.0, 180.0, -90.0, 90.0, NX, NY)
+  private val grid = KDE.Grid(-180.0, 180.0, -90.0, 90.0, NX, NY)
 
   /** A8/F5: weighted Gaussian KDE of the trailing-24 h activity on the grid.
     * z is scaled to parts-per-million of probability density and rounded so
@@ -115,7 +116,7 @@ object AnalyticsOps {
     "q23_kde_density",
     (s, d) =>
       KDE
-        .densityByTag(taggedPoints(s, d).filter(col("tag") === "c"), gridDf(s), BW)
+        .densityByTag(taggedPoints(s, d).filter(col("tag") === "c"), grid, BW)
         .select(col("cell_x"), col("cell_y"), round(col("z") * lit(1000000.0), 4).as("z_ppm"))
         .orderBy(col("cell_x"), col("cell_y")),
     Some(s"""
@@ -153,7 +154,7 @@ object AnalyticsOps {
       // reproduces the old zc⋈zp INNER join: a tag produces rows (for all
       // cells at once) iff its window has ≥1 point, so "cell missing a tag"
       // ≡ "that window is empty" ≡ the join would have dropped every row.
-      val dens = KDE.densityByTag(taggedPoints(s, d), gridDf(s), BW)
+      val dens = KDE.densityByTag(taggedPoints(s, d), grid, BW)
       dens
         .groupBy(col("cell_x"), col("cell_y"))
         .agg(

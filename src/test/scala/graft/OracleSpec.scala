@@ -5,10 +5,13 @@ import java.nio.file.{Files, Path}
 
 import scala.sys.process._
 
+import org.apache.spark.sql.SparkSession
+
 /** The correctness gate inside tier-1: dumps every query at sf0.01 with
   * [[Verify.dump]] and compares each with its DuckDB oracle through
-  * `tools/check_oracle.py`. A missing python3, duckdb or pandas fails the
-  * suite rather than skipping it.
+  * `tools/check_oracle.py`, and the fold-order-sensitive queries again at
+  * other shuffle partition counts. A missing python3, duckdb or pandas fails
+  * the suite rather than skipping it.
   */
 class OracleSpec extends SparkSpec {
 
@@ -24,7 +27,10 @@ class OracleSpec extends SparkSpec {
     (code, out.toString)
   }
 
-  test("every query matches its DuckDB oracle at sf0.01") {
+  /** Dumps the queries `keep` selects in `session` and checks each against
+    * its oracle with `tools/check_oracle.py`, which must report `n` passes.
+    */
+  private def check(session: SparkSession, keep: String => Boolean, n: Int): Unit = {
     val script = new File("tools/check_oracle.py")
     assert(script.isFile, s"no ${script.getAbsolutePath}")
     val (depsCode, depsOut) = run(Seq("python3", "-c", "import duckdb, pandas"))
@@ -32,13 +38,29 @@ class OracleSpec extends SparkSpec {
 
     val out: Path = Files.createTempDirectory("graft-oracle")
     try {
-      val failed = Verify.dump(spark, sf, out.toString, _ => true)
+      val failed = Verify.dump(session, sf, out.toString, keep)
       assert(failed.isEmpty, s"queries threw: ${failed.mkString(",")}")
       val (code, report) = run(Seq("python3", script.getPath, sf, out.toString))
       assert(code == 0, s"check_oracle.py exited $code:\n$report")
-      assert(report.contains(s"${SparkEntry.queries.size} passed, 0 failed"), report)
+      assert(report.contains(s"$n passed, 0 failed"), report)
     } finally {
       Seq("rm", "-rf", out.toString).!
     }
   }
+
+  test("every query matches its DuckDB oracle at sf0.01") {
+    check(spark, _ => true, SparkEntry.queries.size)
+  }
+
+  // The KDE and DBSCAN sums fold in an order that follows the partitioning;
+  // their oracle compare must hold at other shuffle partition counts too.
+  private val foldOrderSensitive = Set("q23_kde_density", "q24_kde_diff", "q25_dbscan_clusters")
+
+  for (partitions <- Seq(1, 7))
+    test(s"q23, q24 and q25 match their oracles at spark.sql.shuffle.partitions=$partitions") {
+      // A new session, so the conf shared by every suite stays as it is.
+      val session = spark.newSession()
+      session.conf.set("spark.sql.shuffle.partitions", partitions.toString)
+      check(session, foldOrderSensitive, foldOrderSensitive.size)
+    }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.{Bridge, TopKFunctions, TopKIds}
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
+import org.scalacheck.{Gen, Prop, Test => Check}
 
 import graft.SparkSpec
 
@@ -62,6 +63,45 @@ class TopKExprsSpec extends SparkSpec {
       .toSeq
 
     assert(got == expected)
+  }
+
+  test("aggregate equals the row_number window reference on random groups") {
+    import scala.jdk.CollectionConverters._
+    // Scores are drawn mostly from a few values, so ties are common, and
+    // include NaN; a group may hold fewer rows than k, or none at all.
+    val score = Gen.frequency(
+      5 -> Gen.oneOf(-1.0, 0.0, 0.5, 1.0),
+      3 -> Gen.choose(-2.0, 2.0),
+      2 -> Gen.const(Double.NaN),
+    )
+    val cases = for {
+      k      <- Gen.choose(1, 5)
+      groups <- Gen.choose(1L, 12L)
+      rows   <- Gen.choose(0, 80).flatMap(Gen.listOfN(_, Gen.zip(Gen.choose(0L, groups - 1), score)))
+    } yield (k, rows)
+    val prop = Prop.forAllNoShrink(cases) { case (k, rows) =>
+      // 7919 is prime, so i·7919 mod 1000 gives the rows distinct ids in a shuffled order.
+      val data = rows.zipWithIndex.map { case ((g, s), i) => Row(g, s, i * 7919L % 1000L) }
+      val df   = spark.createDataFrame(data.asJava, schema).repartition(3)
+      val expected = df
+        .withColumn("rank", row_number().over(Window.partitionBy(col("key")).orderBy(col("score").desc, col("id"))))
+        .filter(col("rank") <= k)
+        .select(col("key"), col("rank"), col("id"))
+        .orderBy(col("key"), col("rank"))
+        .collect()
+        .toSeq
+      val got = df
+        .groupBy(col("key"))
+        .agg(TopKFunctions.topKIds(col("score"), col("id"), k).as("top"))
+        .select(col("key"), posexplode(col("top")).as(Seq("pos", "id")))
+        .select(col("key"), (col("pos") + lit(1)).as("rank"), col("id"))
+        .orderBy(col("key"), col("rank"))
+        .collect()
+        .toSeq
+      got == expected
+    }
+    val result = Check.check(Check.Parameters.default.withMinSuccessfulTests(6).withWorkers(1), prop)
+    assert(result.passed, result.status)
   }
 
   test("NaN scores rank first (Spark double sort order) and tie on id") {
