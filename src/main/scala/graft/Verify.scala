@@ -1,6 +1,9 @@
 package graft
+
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
 
 import graft.core.Session
 
@@ -49,22 +52,8 @@ object Verify {
             Some(name)
         }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => keep(k) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    val sql = SparkEntry.oracleSql.filter { case (k, _) => keep(k) }
+    new ObjectMapper().writeValue(new java.io.File(s"$outDir/oracle_sql.json"), sql.asJava)
     failed
   }
 }

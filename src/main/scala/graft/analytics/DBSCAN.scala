@@ -24,7 +24,8 @@ import graft.functions.Geo
   * SURVEY §7.4); noise keeps −1, like sklearn.
   *
   * (a) **Small inputs** (≤ [[SmallInputThreshold]] points): the kernel runs
-  *     once on the driver. The reference never clusters more than one query
+  *     once on the driver and returns one partition, bounded by the threshold
+  *     (one row per point). The reference never clusters more than one query
   *     window (capped at 9 k rows, `data_base.py:464-482`), so in its
   *     operating envelope this is the only placement ever taken.
   * (b) **Large inputs**: the kernel runs per cell block on the executors,
@@ -75,7 +76,8 @@ object DBSCAN {
     if (smallThreshold > 0 && probe.length <= smallThreshold) {
       val k = new Kernel(probe.map(point), _ => true, epsKm, cellDeg)
       k.setCores(minWeight)
-      spark.createDataset(k.label().collect { case Left(o) => o.id -> labelOf(o, Map.empty) }.toSeq).toDF("id", "cluster_label")
+      val labels = k.label().collect { case Left(o) => o.id -> labelOf(o, Map.empty) }.toSeq
+      spark.createDataset(labels).toDF("id", "cluster_label").coalesce(1)
     } else {
       val parts = Tables.shufflePartitions(spark)
       // Sends each point to the block of its own cell and of the 8 around

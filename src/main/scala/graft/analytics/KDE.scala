@@ -33,12 +33,14 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * Σwy, Σw², Σwxx, Σwxy, Σwyy and the count pin down the normalized mean,
   * Σw²-degeneracy term and covariance algebraically (mx = Σwx/Σw,
   * sw2 = Σw²/(Σw)², …), so no pass sums the weights first and re-scans to
-  * normalize. Pass 2 joins each point to its tag's broadcast row and folds
-  * it into [[GridSum]], keyed by tag: a dense nx·ny array per tag, filled in
-  * the partial aggregate on the points' own partitions, so the only shuffle
-  * moves one array per (tag, map partition), never the data, and no grid
-  * rows exist anywhere. The arrays are exploded to one row per cell at the
-  * end. No collect, no driver math.
+  * normalize. The per-tag constants (inverse covariance, normalization
+  * constant, `valid`) are one projection over that aggregate. Pass 2 joins
+  * each point to its tag's broadcast row and folds it into [[GridSum]],
+  * keyed by tag: a dense nx·ny array per tag, filled in the partial
+  * aggregate on the points' own partitions, so the only shuffle moves one
+  * array per (tag, map partition), never the data, and no grid rows exist
+  * anywhere. The arrays are exploded to one row per cell at the end. No
+  * collect, no driver math.
   */
 object KDE {
 
@@ -58,13 +60,19 @@ object KDE {
     Grid(xmin, xmax, ymin, ymax, nx, ny)
 
   /** Per-tag raw moments → inverse covariance + normalization constant, one
-    * row per tag. Output keeps `sw` so the kernel pass can normalize each
-    * point's weight (wn = w / sw) with the same broadcast.
+    * row per tag: the moments aggregate and one projection whose columns are
+    * built from the Scala values below, so no intermediate column exists.
+    * Output keeps `sw` so the kernel pass can normalize each point's weight
+    * (wn = w / sw) with the same broadcast.
     */
-  private[analytics] def perTag(points: DataFrame, bw: Double): DataFrame = {
-    val f2 = bw * bw
-    def covTerm(exy: Column, mu1: Column, mu2: Column): Column =
-      try_divide(exy - mu1 * mu2, lit(1.0) - col("sw2")) * lit(f2)
+  private def perTag(points: DataFrame, bw: Double): DataFrame = {
+    val sw       = col("sw")
+    val sw2      = col("sww") / (sw * sw)
+    val (mx, my) = (col("swx") / sw, col("swy") / sw)
+    def cov(swab: String, mu1: Column, mu2: Column): Column =
+      try_divide(col(swab) / sw - mu1 * mu2, lit(1.0) - sw2) * lit(bw * bw)
+    val (kxx, kxy, kyy) = (cov("swxx", mx, mx), cov("swxy", mx, my), cov("swyy", my, my))
+    val det             = kxx * kyy - kxy * kxy
     points
       .groupBy(col("tag"))
       .agg(
@@ -79,32 +87,12 @@ object KDE {
       )
       .select(
         col("tag"),
-        col("n"),
-        col("sw"),
-        (col("sww") / (col("sw") * col("sw"))).as("sw2"),
-        (col("swx") / col("sw")).as("mx"),
-        (col("swy") / col("sw")).as("my"),
-        (col("swxx") / col("sw")).as("sxx"),
-        (col("swxy") / col("sw")).as("sxy"),
-        (col("swyy") / col("sw")).as("syy"),
-      )
-      .select(
-        col("tag"),
-        col("n"),
-        col("sw"),
-        col("sw2"),
-        covTerm(col("sxx"), col("mx"), col("mx")).as("kxx"),
-        covTerm(col("sxy"), col("mx"), col("my")).as("kxy"),
-        covTerm(col("syy"), col("my"), col("my")).as("kyy"),
-      )
-      .withColumn("det", col("kxx") * col("kyy") - col("kxy") * col("kxy"))
-      .withColumn("ixx", try_divide(col("kyy"), col("det")))
-      .withColumn("iyy", try_divide(col("kxx"), col("det")))
-      .withColumn("ixy", try_divide(-col("kxy"), col("det")))
-      .withColumn("nc", try_divide(lit(1.0), lit(2.0 * math.Pi) * sqrt(col("det"))))
-      .withColumn(
-        "valid",
-        col("n") >= 2 && col("sw2") < 1.0 && col("det") > 0.0,
+        sw,
+        try_divide(kyy, det).as("ixx"),
+        try_divide(kxx, det).as("iyy"),
+        try_divide(-kxy, det).as("ixy"),
+        try_divide(lit(1.0), lit(2.0 * math.Pi) * sqrt(det)).as("nc"),
+        (col("n") >= 2 && sw2 < 1.0 && det > 0.0).as("valid"),
       )
   }
 

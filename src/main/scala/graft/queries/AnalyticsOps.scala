@@ -47,15 +47,7 @@ object AnalyticsOps {
         "tag",
         when(col("ts") > col("anchor") - expr("INTERVAL 24 HOURS"), lit("c")).otherwise(lit("p")),
       )
-      .withColumn("x", lon)
-      .withColumn("y", lat)
-      .withColumn("rn", userRank(col("tag")))
-      .select(
-        col("tag"),
-        col("x"),
-        col("y"),
-        decayWeight(col("rn")).as("w"),
-      )
+      .select(col("tag"), lon.as("x"), lat.as("y"), decayWeight(userRank(col("tag"))).as("w"))
 
   private def pointsSqlCte(tag: String, loHours: Int, hiHours: Int): String =
     s"""pts_$tag AS (
@@ -118,6 +110,9 @@ object AnalyticsOps {
       KDE
         .densityByTag(taggedPoints(s, d).filter(col("tag") === "c"), grid, BW)
         .select(col("cell_x"), col("cell_y"), round(col("z") * lit(1000000.0), 4).as("z_ppm"))
+        // At most nx·ny rows at any scale: sorted in one partition, with no
+        // range exchange and no sampling job.
+        .coalesce(1)
         .orderBy(col("cell_x"), col("cell_y")),
     Some(s"""
       WITH ${pointsSqlCte("c", 0, 24)},
@@ -154,8 +149,12 @@ object AnalyticsOps {
       // reproduces the old zc⋈zp INNER join: a tag produces rows (for all
       // cells at once) iff its window has ≥1 point, so "cell missing a tag"
       // ≡ "that window is empty" ≡ the join would have dropped every row.
-      val dens = KDE.densityByTag(taggedPoints(s, d), grid, BW)
-      dens
+      // At most 2·nx·ny (tag, cell) rows at any scale: sorted in one
+      // partition, with no range exchange and no sampling job. The pivot
+      // runs in that partition too, with no hash exchange.
+      KDE
+        .densityByTag(taggedPoints(s, d), grid, BW)
+        .coalesce(1)
         .groupBy(col("cell_x"), col("cell_y"))
         .agg(
           max(when(col("tag") === "c", round(col("z") * lit(1000000.0), 4))).as("zc"),

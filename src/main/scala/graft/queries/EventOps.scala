@@ -71,7 +71,7 @@ object EventOps {
             (col("event_type").isin("click", "view") || col("event_type").isNull),
         )
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-        .repartition(col("event_id"))
+        .repartition(Tables.shufflePartitions(s), col("event_id"))
         .orderBy(col("ts").desc, col("event_id")),
     Some(s"""
       SELECT event_id, ts, user_id, event_type, value

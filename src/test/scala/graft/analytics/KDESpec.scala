@@ -1,12 +1,13 @@
 package graft.analytics
 
 import org.apache.spark.TestListenerBus
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.optimizer.BuildRight
-import org.apache.spark.sql.execution.RangeExec
+import org.apache.spark.sql.execution.{FilterExec, RangeExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => Check}
 
@@ -15,7 +16,8 @@ import graft.{SparkEntry, SparkSpec}
 /** KDE edge cases on crafted point sets: the one-tag entry point agrees with
   * the tagged one, and the degenerate inputs the reference maps to its
   * LinAlgError → zeros fallback (`data_utils.py:177-189`) give z ≡ 0. The
-  * grid aggregate equals the point ⨯ grid DataFrame algebra it replaced on
+  * grid aggregate and the one-projection per-tag constants equal the point ⨯
+  * grid DataFrame algebra and the column-by-column constants they replaced on
   * random tagged frames, and the KDE queries' plans hold no such product.
   */
 class KDESpec extends SparkSpec with AdaptiveSparkPlanHelper {
@@ -68,9 +70,58 @@ class KDESpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(line.size == NX * NY && line.values.forall(_ == 0.0))
   }
 
+  /** The per-tag constants as a chain of column steps, one named column per
+    * intermediate: the moments, then `sw2` and the means, the covariance
+    * `kxx`, `kxy`, `kyy`, `det`, and from those the inverse, `nc` and
+    * `valid`, with the operations of [[KDE]]'s one projection.
+    */
+  private def perTagSteps(points: DataFrame, bw: Double): DataFrame = {
+    val f2 = bw * bw
+    def covTerm(exy: Column, mu1: Column, mu2: Column): Column =
+      try_divide(exy - mu1 * mu2, lit(1.0) - col("sw2")) * lit(f2)
+    points
+      .groupBy(col("tag"))
+      .agg(
+        sum(col("w")).as("sw"),
+        sum(col("w") * col("x")).as("swx"),
+        sum(col("w") * col("y")).as("swy"),
+        sum(col("w") * col("w")).as("sww"),
+        sum(col("w") * col("x") * col("x")).as("swxx"),
+        sum(col("w") * col("x") * col("y")).as("swxy"),
+        sum(col("w") * col("y") * col("y")).as("swyy"),
+        count(lit(1)).as("n"),
+      )
+      .select(
+        col("tag"),
+        col("n"),
+        col("sw"),
+        (col("sww") / (col("sw") * col("sw"))).as("sw2"),
+        (col("swx") / col("sw")).as("mx"),
+        (col("swy") / col("sw")).as("my"),
+        (col("swxx") / col("sw")).as("sxx"),
+        (col("swxy") / col("sw")).as("sxy"),
+        (col("swyy") / col("sw")).as("syy"),
+      )
+      .select(
+        col("tag"),
+        col("n"),
+        col("sw"),
+        col("sw2"),
+        covTerm(col("sxx"), col("mx"), col("mx")).as("kxx"),
+        covTerm(col("sxy"), col("mx"), col("my")).as("kxy"),
+        covTerm(col("syy"), col("my"), col("my")).as("kyy"),
+      )
+      .withColumn("det", col("kxx") * col("kyy") - col("kxy") * col("kxy"))
+      .withColumn("ixx", try_divide(col("kyy"), col("det")))
+      .withColumn("iyy", try_divide(col("kxx"), col("det")))
+      .withColumn("ixy", try_divide(-col("kxy"), col("det")))
+      .withColumn("nc", try_divide(lit(1.0), lit(2.0 * math.Pi) * sqrt(col("det"))))
+      .withColumn("valid", col("n") >= 2 && col("sw2") < 1.0 && col("det") > 0.0)
+  }
+
   /** The DataFrame algebra the grid aggregate replaced: every point crossed
     * with a `range ⨯ range` frame of the grid's cells, the kernel written as
-    * column expressions and summed per (tag, cell).
+    * column expressions and summed per (tag, cell), over [[perTagSteps]].
     */
   private def crossJoinDensity(pts: DataFrame, g: KDE.Grid, bw: Double): DataFrame = {
     val cells = spark.range(g.nx.toLong).select(col("id").as("cell_x"))
@@ -80,7 +131,7 @@ class KDESpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val (dxc, dyc) = (col("gx") - col("x"), col("gy") - col("y"))
     val quad       = dxc * dxc * col("ixx") + lit(2.0) * dxc * dyc * col("ixy") + dyc * dyc * col("iyy")
     pts
-      .join(broadcast(KDE.perTag(pts, bw)), "tag")
+      .join(broadcast(perTagSteps(pts, bw)), "tag")
       .crossJoin(broadcast(cells))
       .groupBy(col("tag"), col("cell_x"), col("cell_y"), col("valid"), col("nc"))
       .agg(sum(col("w") / col("sw") * exp(lit(-0.5) * quad)).as("s"))
@@ -137,6 +188,17 @@ class KDESpec extends SparkSpec with AdaptiveSparkPlanHelper {
       }
       assert(products.isEmpty, s"$name: $products")
     }
+  }
+
+  test("q23's tag filter runs below its decay window") {
+    // The filter is on a window partition key, so it can be pushed below the
+    // window and only the current window's rows are ranked.
+    val df = SparkEntry.queries("q23_kde_density")(spark, "/root/testdata/sf0.01")
+    df.collect()
+    val above = collect(df.queryExecution.executedPlan) {
+      case f: FilterExec if f.references.exists(_.name == "tag") && find(f.child)(_.isInstanceOf[WindowExec]).isDefined => f
+    }
+    assert(above.isEmpty, above)
   }
 
   test("densityByTag launches as many jobs on 1,000 points as on 10") {

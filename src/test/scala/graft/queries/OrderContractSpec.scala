@@ -1,7 +1,8 @@
 package graft.queries
 
+import org.apache.spark.TestListenerBus
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning, RangePartitioning}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 
@@ -77,20 +78,43 @@ class OrderContractSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       assert(violations.isEmpty, s"$name order violations (index, prev, next): $violations")
     }
 
-  /** The partition counts of the range exchanges in `df`'s executed plan,
+  /** The partitionings of the shuffle exchanges in `df`'s executed plan,
     * after it ran (the final adaptive plan).
     */
-  private def rangeExchanges(df: DataFrame): Seq[Int] = {
+  private def exchanges(df: DataFrame): Seq[Partitioning] = {
     df.collect()
-    collect(df.queryExecution.executedPlan) {
-      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] =>
-        e.outputPartitioning.numPartitions
-    }
+    collect(df.queryExecution.executedPlan) { case e: ShuffleExchangeExec => e.outputPartitioning }
   }
 
-  test("q11 and q15 sort their bounded outputs in one partition, with no range exchange") {
-    for (name <- Seq("q11_count_events_window", "q15_retention_cutoff"))
-      assert(rangeExchanges(SparkEntry.queries(name)(spark, sf)).isEmpty, name)
+  /** The partition counts of the range exchanges in `df`'s executed plan. */
+  private def rangeExchanges(df: DataFrame): Seq[Int] =
+    exchanges(df).collect { case r: RangePartitioning => r.numPartitions }
+
+  test("q11, q15, q23, q24 and q25 sort their bounded outputs in one partition, with no range exchange") {
+    // q24 also pivots its (tag, cell) rows per cell in that one partition.
+    def byCell(h: HashPartitioning) = h.expressions.flatMap(_.references.map(_.name)).toSet == Set("cell_x", "cell_y")
+    val bounded   = Seq("q11_count_events_window", "q15_retention_cutoff", "q23_kde_density", "q24_kde_diff", "q25_dbscan_clusters")
+    val offending = for (name <- bounded) yield
+      name -> exchanges(SparkEntry.queries(name)(spark, sf)).filter {
+        case _: RangePartitioning => true
+        case h: HashPartitioning  => byCell(h)
+        case _                    => false
+      }
+    assert(offending.forall(_._2.isEmpty), offending)
+  }
+
+  test("the detection tick's warm job counts, build + execute: q23 0 + 7, q24 0 + 7, q25 2 + 1") {
+    def jobs(body: => Unit): Int = TestListenerBus.jobs(spark.sparkContext)(body)
+    def noop(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
+    val counts = for (name <- Seq("q23_kde_density", "q24_kde_diff", "q25_dbscan_clusters")) yield {
+      // Warm: a first execution, so no count holds a table's one-off schema
+      // registration. q25's two build jobs are DBSCAN's placement probe.
+      noop(SparkEntry.queries(name)(spark, sf))
+      var df: DataFrame = null
+      val build = jobs { df = SparkEntry.queries(name)(spark, sf) }
+      name -> (build, jobs(noop(df)))
+    }
+    assert(counts == Seq("q23_kde_density" -> (0, 7), "q24_kde_diff" -> (0, 7), "q25_dbscan_clusters" -> (2, 1)))
   }
 
   test("q16's pinned range exchange takes the session's shuffle partition count") {
