@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.analytics.{DBSCAN, KDE}
 import graft.core.{QuerySpec, Tables}
 import graft.functions.Geo
-import EventOps.{anchorSql, decayWeight, decayWeightSql, eventsWithAnchor, userRank, userRankSql}
+import EventOps.{anchorSql, decayWeight, decayWeightSql, userRank, userRankSql}
 import GeoOps.{lat, latSql, lon, lonSql}
 
 /** The reference's analytical kernel re-expressed over the driver testdata:
@@ -33,21 +33,20 @@ object AnalyticsOps {
     * reference weights each queried activity list independently,
     * `data_utils.py:129-138`): the decay rank partitions by (user_id, tag).
     * q24 takes both windows from this one scan and one window exchange (guide
-    * §1.2: don't compute the same input twice). q23 filters it to tag `c`;
-    * the filter is on a window partition key, so the optimizer pushes it
-    * below the window into the anchor join and only the 24 h rows are ranked.
+    * §1.2: don't compute the same input twice). The three uses of the anchor
+    * are one scalar subquery, run once. q23 filters it to tag `c`; the filter
+    * is on a window partition key, so the optimizer pushes it below the window
+    * into the time filter and only the 24 h rows are ranked. `tag` is its
+    * own step so that it stays a plain partition key.
     */
-  private def taggedPoints(s: SparkSession, d: String): DataFrame =
-    eventsWithAnchor(s, d)
-      .filter(
-        col("ts") > col("anchor") - expr("INTERVAL 48 HOURS") &&
-          col("ts") <= col("anchor"),
-      )
-      .withColumn(
-        "tag",
-        when(col("ts") > col("anchor") - expr("INTERVAL 24 HOURS"), lit("c")).otherwise(lit("p")),
-      )
+  private def taggedPoints(s: SparkSession, d: String): DataFrame = {
+    val anchor = EventOps.anchor(s, d)
+    Tables
+      .events(s, d)
+      .filter(col("ts") > anchor - expr("INTERVAL 48 HOURS") && col("ts") <= anchor)
+      .withColumn("tag", when(col("ts") > anchor - expr("INTERVAL 24 HOURS"), lit("c")).otherwise(lit("p")))
       .select(col("tag"), lon.as("x"), lat.as("y"), decayWeight(userRank(col("tag"))).as("w"))
+  }
 
   private def pointsSqlCte(tag: String, loHours: Int, hiHours: Int): String =
     s"""pts_$tag AS (
@@ -197,16 +196,8 @@ object AnalyticsOps {
     (s, d) => {
       val pts = Tables
         .events(s, d)
-        .withColumn("x", lon)
-        .withColumn("y", lat)
-        .filter(Geo.inbounds(col("x"), col("y"), -30.0, -30.0, 30.0, 30.0))
-        .withColumn("rn", userRank())
-        .select(
-          col("event_id").as("id"),
-          col("x"),
-          col("y"),
-          decayWeight(col("rn")).as("w"),
-        )
+        .filter(Geo.inbounds(lon, lat, -30.0, -30.0, 30.0, 30.0))
+        .select(col("event_id").as("id"), lon.as("x"), lat.as("y"), decayWeight(userRank()).as("w"))
       DBSCAN
         .cluster(pts, epsKm = 300.0, minWeight = 3.0, cellDeg = 4.0)
         .select(col("id").as("event_id"), col("cluster_label"))

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -12,7 +12,7 @@ import graft.core.{QuerySpec, Tables}
   * Reference semantics carried over:
   *  - time windows are anchored at the newest row's event time, not wall clock
   *    (`/root/reference/thisishappening/app.py:401-447`) — here the anchor is a
-  *    1-row broadcast aggregate, never a driver-side collect;
+  *    scalar subquery, never a driver-side collect;
   *  - `event_type IN (...) OR event_type IS NULL` filter shape
   *    (`data_base.py:109-113`);
   *  - keep-newest-N retention (`data_base.py:464-482`) becomes
@@ -23,14 +23,12 @@ import graft.core.{QuerySpec, Tables}
   */
 object EventOps {
 
-  /** The events table with the window anchor — the newest row's `ts` — as
-    * column `anchor`, joined from a 1-row broadcast aggregate. [[anchorSql]]
-    * is the oracle's copy.
+  /** The window anchor — the newest row's `ts`, `NULL` on an empty table —
+    * as a scalar subquery over the events table. [[anchorSql]] is the
+    * oracle's copy.
     */
-  private[queries] def eventsWithAnchor(s: SparkSession, d: String): DataFrame = {
-    val ev = Tables.events(s, d)
-    ev.crossJoin(broadcast(ev.agg(max(col("ts")).as("anchor"))))
-  }
+  private[queries] def anchor(s: SparkSession, d: String): Column =
+    Tables.events(s, d).agg(max(col("ts"))).scalar()
   private[queries] val anchorSql = "(SELECT max(ts) FROM events)"
 
   /** Per-user recency rank: 1 for each user's earliest row, by (ts,
@@ -58,16 +56,17 @@ object EventOps {
       // Hash materialization boundary BELOW the global sort (guide §2.4, the
       // q42-r21 pattern): the range partitioner's sampling pass executes the
       // sort's entire child once before the real shuffle executes it again,
-      // and here that child is the full events scan + anchor join + filter —
+      // and here that child is the full events scan + anchor filter —
       // the r21 repartitionByRange rewrite did NOT change that (its exchange
       // had the same child; flagged as cosmetic by the r21 audit). With the
       // filtered rows first hash-exchanged on event_id, the sampling pass
       // re-reads that (small, 24 h window) shuffle output instead of
       // re-scanning the table: one scan at any scale, and the extra exchange
       // carries only the filtered window.
-      eventsWithAnchor(s, d)
+      Tables
+        .events(s, d)
         .filter(
-          col("ts") >= col("anchor") - expr("INTERVAL 24 HOURS") &&
+          col("ts") >= anchor(s, d) - expr("INTERVAL 24 HOURS") &&
             (col("event_type").isin("click", "view") || col("event_type").isNull),
         )
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
@@ -86,8 +85,9 @@ object EventOps {
   val qCountWindow: QuerySpec = QuerySpec(
     "q11_count_events_window",
     (s, d) =>
-      eventsWithAnchor(s, d)
-        .filter(col("ts") >= col("anchor") - expr("INTERVAL 72 HOURS"))
+      Tables
+        .events(s, d)
+        .filter(col("ts") >= anchor(s, d) - expr("INTERVAL 72 HOURS"))
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"), round(sum(col("value")), 4).as("sum_value"))
         // One row per event_type at any scale: sorted in one partition, with
@@ -158,8 +158,9 @@ object EventOps {
   val qRetention: QuerySpec = QuerySpec(
     "q15_retention_cutoff",
     (s, d) =>
-      eventsWithAnchor(s, d)
-        .filter(col("ts") >= col("anchor") - expr("INTERVAL 7 DAYS"))
+      Tables
+        .events(s, d)
+        .filter(col("ts") >= anchor(s, d) - expr("INTERVAL 7 DAYS"))
         .groupBy(date_trunc("day", col("ts")).as("day"))
         .agg(count(lit(1)).as("n_kept"))
         // At most 8 days in a 7-day window at any scale: sorted in one

@@ -32,9 +32,7 @@ object GeoOps {
     (s, d) =>
       Tables
         .events(s, d)
-        .withColumn("lon", lon)
-        .withColumn("lat", lat)
-        .filter(Geo.inbounds(col("lon"), col("lat"), -50.0, -30.0, 50.0, 30.0))
+        .filter(Geo.inbounds(lon, lat, -50.0, -30.0, 50.0, 30.0))
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"))
         .orderBy(col("event_type")),
@@ -58,13 +56,7 @@ object GeoOps {
     (s, d) =>
       Tables
         .events(s, d)
-        .withColumn("lon", lon)
-        .withColumn("lat", lat)
-        .select(
-          col("event_id"),
-          round(Geo.haversineKm(lit(0.0), lit(0.0), col("lon"), col("lat")), 3)
-            .as("dist_km"),
-        )
+        .select(col("event_id"), round(Geo.haversineKm(lit(0.0), lit(0.0), lon, lat), 3).as("dist_km"))
         .orderBy(col("event_id"))
         .limit(2000),
     Some(s"""

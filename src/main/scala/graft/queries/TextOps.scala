@@ -22,10 +22,11 @@ import graft.core.{QuerySpec, Tables}
 object TextOps {
 
   /** Whitespace tokenization of lowercased text; drops empty tokens.
-    * Matches DuckDB `list_filter(regexp_split_to_array(lower(text),'\s+'), ..)`.
+    * [[toksSql]] is the oracle's copy.
     */
   private def toks: Column =
     filter(split(lower(col("text")), "\\s+"), t => t =!= "")
+  private val toksSql = """list_filter(regexp_split_to_array(lower(text), '\s+'), tk -> tk <> '')"""
 
   /** Word 3-gram shingles: one string per consecutive token triple.
     *
@@ -103,8 +104,8 @@ object TextOps {
     array_min(transform(shs, sh => md5(concat(sh, lit(s"#$seed")).cast("binary"))))
 
   private val shingleSqlCte =
-    """t AS (SELECT doc_id,
-      |            list_filter(regexp_split_to_array(lower(text), '\s+'), tk -> tk <> '') AS toks
+    s"""t AS (SELECT doc_id,
+      |            $toksSql AS toks
       |     FROM documents),
       |ds AS (SELECT DISTINCT doc_id,
       |              unnest(list_transform(range(1, len(toks) - 1),
@@ -125,10 +126,9 @@ object TextOps {
         .agg(count(lit(1)).as("n"))
         .orderBy(col("n").desc, col("token"))
         .limit(100),
-    Some("""
+    Some(s"""
       SELECT token, count(*) AS n
-      FROM (SELECT unnest(list_filter(regexp_split_to_array(lower(text), '\s+'),
-                                      tk -> tk <> '')) AS token
+      FROM (SELECT unnest($toksSql) AS token
             FROM documents)
       GROUP BY token
       ORDER BY n DESC, token
@@ -164,15 +164,15 @@ object TextOps {
             6,
           ),
         ),
-    Some("""
+    Some(s"""
       SELECT doc_id, n_chars_calc, n_tokens, n_punct, n_stop,
              round(n_stop * 1.0 / nullif(n_tokens, 0), 6) AS stop_ratio,
              round(least(n_tokens / 50.0, 1.0) * (1.0 - n_punct * 1.0 / nullif(n_chars_calc, 0)), 6) AS quality
       FROM (SELECT doc_id,
                    length(text) AS n_chars_calc,
-                   len(list_filter(regexp_split_to_array(lower(text), '\s+'), tk -> tk <> '')) AS n_tokens,
+                   len($toksSql) AS n_tokens,
                    length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')) AS n_punct,
-                   len(regexp_extract_all(lower(text), '\b(the|a|and|of|to|in|is)\b')) AS n_stop
+                   len(regexp_extract_all(lower(text), '\\b(the|a|and|of|to|in|is)\\b')) AS n_stop
             FROM documents)
       ORDER BY doc_id
     """.stripMargin.trim),
@@ -480,8 +480,7 @@ object TextOps {
       }.mkString(" ||\n             ")
       s"""
       WITH tok AS (SELECT DISTINCT doc_id,
-                          unnest(list_filter(regexp_split_to_array(lower(text), '\\s+'),
-                                             tk -> tk <> '')) AS token
+                          unnest($toksSql) AS token
                    FROM documents),
       h AS (SELECT doc_id, md5(token) AS h FROM tok),
       v AS (SELECT doc_id,
@@ -510,9 +509,9 @@ object TextOps {
             .as("n_word_tokens"),
           ceil(length(col("text")) / lit(4.0)).cast("long").as("n_bpe_est"),
         ),
-    Some("""
+    Some(s"""
       SELECT doc_id,
-             len(list_filter(regexp_split_to_array(lower(text), '\s+'), tk -> tk <> '')) AS n_ws_tokens,
+             len($toksSql) AS n_ws_tokens,
              len(list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), tk -> tk <> '')) AS n_word_tokens,
              CAST(ceil(length(text) / 4.0) AS BIGINT) AS n_bpe_est
       FROM documents

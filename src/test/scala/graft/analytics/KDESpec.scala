@@ -2,10 +2,8 @@ package graft.analytics
 
 import org.apache.spark.TestListenerBus
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.optimizer.BuildRight
 import org.apache.spark.sql.execution.{FilterExec, RangeExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
@@ -171,20 +169,12 @@ class KDESpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(result.passed, result.status)
   }
 
-  /** True iff `j` joins against a broadcast global aggregate, so at most one
-    * row: the window anchor `max(ts)` every event query crosses with events.
-    */
-  private def againstOneRow(j: BroadcastNestedLoopJoinExec): Boolean =
-    find(if (j.buildSide == BuildRight) j.right else j.left)(_.isInstanceOf[BaseAggregateExec])
-      .exists(_.asInstanceOf[BaseAggregateExec].groupingExpressions.isEmpty)
-
   test("q23 and q24 run no point ⨯ grid nested-loop join, cartesian product or range") {
     for (name <- Seq("q23_kde_density", "q24_kde_diff")) {
       val df = SparkEntry.queries(name)(spark, "/root/testdata/sf0.01")
       df.collect()
       val products = collectWithSubqueries(df.queryExecution.executedPlan) {
-        case p @ (_: CartesianProductExec | _: RangeExec)       => p.nodeName
-        case j: BroadcastNestedLoopJoinExec if !againstOneRow(j) => j.nodeName
+        case p @ (_: BroadcastNestedLoopJoinExec | _: CartesianProductExec | _: RangeExec) => p.nodeName
       }
       assert(products.isEmpty, s"$name: $products")
     }

@@ -4,7 +4,8 @@ import org.apache.spark.TestListenerBus
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning, RangePartitioning}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
 
 import graft.SparkSpec
 import graft.SparkEntry
@@ -24,7 +25,9 @@ import graft.SparkEntry
   *
   * It also pins the exchanges behind the order: the bounded outputs sorted
   * in one partition carry no range exchange, and a pinned range exchange
-  * takes its partition count from the session conf.
+  * takes its partition count from the session conf. The windowed event
+  * queries read their anchor with no join, and the warm job counts of the
+  * windowed and detection queries are pinned.
   */
 class OrderContractSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
@@ -103,10 +106,29 @@ class OrderContractSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(offending.forall(_._2.isEmpty), offending)
   }
 
-  test("the detection tick's warm job counts, build + execute: q23 0 + 7, q24 0 + 7, q25 2 + 1") {
+  test("q10, q11 and q15 read the window anchor with no nested-loop join and no broadcast") {
+    val offending = for (name <- Seq("q10_recent_events", "q11_count_events_window", "q15_retention_cutoff")) yield {
+      val df = SparkEntry.queries(name)(spark, sf)
+      df.collect()
+      name -> collectWithSubqueries(df.queryExecution.executedPlan) {
+        case p @ (_: BroadcastNestedLoopJoinExec | _: BroadcastExchangeExec) => p.nodeName
+      }
+    }
+    assert(offending.forall(_._2.isEmpty), offending)
+  }
+
+  test("the window and detection queries' warm job counts, build + execute: q10 0 + 6, q11 0 + 4, q15 0 + 4, q23 0 + 7, q24 0 + 7, q25 2 + 1") {
+    val expected = Seq(
+      "q10_recent_events"       -> (0, 6),
+      "q11_count_events_window" -> (0, 4),
+      "q15_retention_cutoff"    -> (0, 4),
+      "q23_kde_density"         -> (0, 7),
+      "q24_kde_diff"            -> (0, 7),
+      "q25_dbscan_clusters"     -> (2, 1),
+    )
     def jobs(body: => Unit): Int = TestListenerBus.jobs(spark.sparkContext)(body)
     def noop(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
-    val counts = for (name <- Seq("q23_kde_density", "q24_kde_diff", "q25_dbscan_clusters")) yield {
+    val counts = for ((name, _) <- expected) yield {
       // Warm: a first execution, so no count holds a table's one-off schema
       // registration. q25's two build jobs are DBSCAN's placement probe.
       noop(SparkEntry.queries(name)(spark, sf))
@@ -114,7 +136,7 @@ class OrderContractSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       val build = jobs { df = SparkEntry.queries(name)(spark, sf) }
       name -> (build, jobs(noop(df)))
     }
-    assert(counts == Seq("q23_kde_density" -> (0, 7), "q24_kde_diff" -> (0, 7), "q25_dbscan_clusters" -> (2, 1)))
+    assert(counts == expected)
   }
 
   test("q16's pinned range exchange takes the session's shuffle partition count") {
