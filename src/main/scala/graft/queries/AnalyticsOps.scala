@@ -34,16 +34,15 @@ object AnalyticsOps {
     * `data_utils.py:129-138`): the decay rank partitions by (user_id, tag).
     * q24 takes both windows from this one scan and one window exchange (guide
     * §1.2: don't compute the same input twice). The three uses of the anchor
-    * are one scalar subquery, run once. q23 filters it to tag `c`; the filter
-    * is on a window partition key, so the optimizer pushes it below the window
-    * into the time filter and only the 24 h rows are ranked. `tag` is its
-    * own step so that it stays a plain partition key.
+    * are one value: a literal, or one scalar subquery, run once. q23 filters
+    * it to tag `c`; the filter is on a window partition key, so the optimizer
+    * pushes it below the window into the time filter and only the 24 h rows
+    * are ranked. `tag` is its own step so that it stays a plain partition key.
     */
   private def taggedPoints(s: SparkSession, d: String): DataFrame = {
-    val anchor = EventOps.anchor(s, d)
-    Tables
-      .events(s, d)
-      .filter(col("ts") > anchor - expr("INTERVAL 48 HOURS") && col("ts") <= anchor)
+    val ev     = Tables.events(s, d)
+    val anchor = EventOps.anchor(ev)
+    ev.filter(col("ts") > anchor - expr("INTERVAL 48 HOURS") && col("ts") <= anchor)
       .withColumn("tag", when(col("ts") > anchor - expr("INTERVAL 24 HOURS"), lit("c")).otherwise(lit("p")))
       .select(col("tag"), lon.as("x"), lat.as("y"), decayWeight(userRank(col("tag"))).as("w"))
   }

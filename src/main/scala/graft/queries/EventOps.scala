@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -12,7 +12,8 @@ import graft.core.{QuerySpec, Tables}
   * Reference semantics carried over:
   *  - time windows are anchored at the newest row's event time, not wall clock
   *    (`/root/reference/thisishappening/app.py:401-447`) — here the anchor is a
-  *    scalar subquery, never a driver-side collect;
+  *    literal read from the parquet footers, or a scalar subquery where they
+  *    lack the statistics, never a driver-side collect;
   *  - `event_type IN (...) OR event_type IS NULL` filter shape
   *    (`data_base.py:109-113`);
   *  - keep-newest-N retention (`data_base.py:464-482`) becomes
@@ -23,12 +24,14 @@ import graft.core.{QuerySpec, Tables}
   */
 object EventOps {
 
-  /** The window anchor — the newest row's `ts`, `NULL` on an empty table —
-    * as a scalar subquery over the events table. [[anchorSql]] is the
-    * oracle's copy.
+  /** The window anchor of the events handle `ev` (from [[Tables.events]]) —
+    * the newest row's `ts`, `NULL` on an empty table. It is a literal read
+    * from the footers of the files `ev` lists ([[Tables.newestTs]]), so it
+    * runs no job; where a footer lacks the `ts` statistics it is a scalar
+    * subquery over `ev`. [[anchorSql]] is the oracle's copy.
     */
-  private[queries] def anchor(s: SparkSession, d: String): Column =
-    Tables.events(s, d).agg(max(col("ts"))).scalar()
+  private[queries] def anchor(ev: DataFrame): Column =
+    Tables.newestTs(ev).getOrElse(ev.agg(max(col("ts"))).scalar())
   private[queries] val anchorSql = "(SELECT max(ts) FROM events)"
 
   /** Per-user recency rank: 1 for each user's earliest row, by (ts,
@@ -52,7 +55,7 @@ object EventOps {
     */
   val qRecentEvents: QuerySpec = QuerySpec(
     "q10_recent_events",
-    (s, d) =>
+    (s, d) => {
       // Hash materialization boundary BELOW the global sort (guide §2.4, the
       // q42-r21 pattern): the range partitioner's sampling pass executes the
       // sort's entire child once before the real shuffle executes it again,
@@ -63,15 +66,16 @@ object EventOps {
       // re-reads that (small, 24 h window) shuffle output instead of
       // re-scanning the table: one scan at any scale, and the extra exchange
       // carries only the filtered window.
-      Tables
-        .events(s, d)
+      val ev = Tables.events(s, d)
+      ev
         .filter(
-          col("ts") >= anchor(s, d) - expr("INTERVAL 24 HOURS") &&
+          col("ts") >= anchor(ev) - expr("INTERVAL 24 HOURS") &&
             (col("event_type").isin("click", "view") || col("event_type").isNull),
         )
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
         .repartition(Tables.shufflePartitions(s), col("event_id"))
-        .orderBy(col("ts").desc, col("event_id")),
+        .orderBy(col("ts").desc, col("event_id"))
+    },
     Some(s"""
       SELECT event_id, ts, user_id, event_type, value
       FROM events
@@ -84,16 +88,16 @@ object EventOps {
   /** Q2: windowed count per type (`data_base.py:276-305`). */
   val qCountWindow: QuerySpec = QuerySpec(
     "q11_count_events_window",
-    (s, d) =>
-      Tables
-        .events(s, d)
-        .filter(col("ts") >= anchor(s, d) - expr("INTERVAL 72 HOURS"))
+    (s, d) => {
+      val ev = Tables.events(s, d)
+      ev.filter(col("ts") >= anchor(ev) - expr("INTERVAL 72 HOURS"))
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"), round(sum(col("value")), 4).as("sum_value"))
         // One row per event_type at any scale: sorted in one partition, with
         // no range exchange and no sampling job.
         .coalesce(1)
-        .orderBy(col("event_type")),
+        .orderBy(col("event_type"))
+    },
     Some(s"""
       SELECT event_type, count(*) AS n, round(sum(value), 4) AS sum_value
       FROM events
@@ -157,16 +161,16 @@ object EventOps {
     */
   val qRetention: QuerySpec = QuerySpec(
     "q15_retention_cutoff",
-    (s, d) =>
-      Tables
-        .events(s, d)
-        .filter(col("ts") >= anchor(s, d) - expr("INTERVAL 7 DAYS"))
+    (s, d) => {
+      val ev = Tables.events(s, d)
+      ev.filter(col("ts") >= anchor(ev) - expr("INTERVAL 7 DAYS"))
         .groupBy(date_trunc("day", col("ts")).as("day"))
         .agg(count(lit(1)).as("n_kept"))
         // At most 8 days in a 7-day window at any scale: sorted in one
         // partition, with no range exchange and no sampling job.
         .coalesce(1)
-        .orderBy(col("day")),
+        .orderBy(col("day"))
+    },
     Some(s"""
       SELECT date_trunc('day', ts) AS day, count(*) AS n_kept
       FROM events
@@ -261,6 +265,9 @@ object EventOps {
         )
         .groupBy(col("anchor_id"))
         .agg(count(lit(1)).as("n_in_window"), round(sum(col("value")), 4).as("sum_value"))
+        // At most 5 anchors (the limit above) at any scale: sorted in one
+        // partition, with no range exchange and no sampling job.
+        .coalesce(1)
         .orderBy(col("anchor_id"))
     },
     Some("""

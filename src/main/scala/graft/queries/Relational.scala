@@ -36,6 +36,9 @@ object Relational {
           round(avg(col("l_discount")), 4).as("avg_disc"),
           count(lit(1)).as("count_order"),
         )
+        // One row per (l_returnflag, l_linestatus), 4 in TPC-H at any scale:
+        // sorted in one partition, with no range exchange and no sampling job.
+        .coalesce(1)
         .orderBy(col("l_returnflag"), col("l_linestatus")),
     Some("""
       SELECT l_returnflag, l_linestatus,
@@ -71,6 +74,9 @@ object Relational {
             .as("revenue"),
           count(lit(1)).as("n_items"),
         )
+        // At most 25 nations at any scale: sorted in one partition, with no
+        // range exchange and no sampling job.
+        .coalesce(1)
         .orderBy(col("n_name"))
     },
     Some("""
@@ -129,6 +135,9 @@ object Relational {
         )
         .groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("n_orders"))
+        // 5 order priorities at any scale: sorted in one partition, with no
+        // range exchange and no sampling job.
+        .coalesce(1)
         .orderBy(col("o_orderpriority"))
     },
     Some("""

@@ -9,8 +9,8 @@ import org.apache.spark.sql.SparkSession
 
 /** The correctness gate inside tier-1: dumps every query at sf0.01 with
   * [[Verify.dump]] and compares each with its DuckDB oracle through
-  * `tools/check_oracle.py`, and the fold-order-sensitive queries again at
-  * other shuffle partition counts. A missing python3, duckdb or pandas fails
+  * `tools/check_oracle.py`, and the fold-order-sensitive and window-anchored
+  * queries again at other shuffle partition counts. A missing python3, duckdb or pandas fails
   * the suite rather than skipping it.
   */
 class OracleSpec extends SparkSpec {
@@ -52,15 +52,17 @@ class OracleSpec extends SparkSpec {
     check(spark, _ => true, SparkEntry.queries.size)
   }
 
-  // The KDE and DBSCAN sums fold in an order that follows the partitioning;
-  // their oracle compare must hold at other shuffle partition counts too.
-  private val foldOrderSensitive = Set("q23_kde_density", "q24_kde_diff", "q25_dbscan_clusters")
+  // The KDE and DBSCAN sums fold in an order that follows the partitioning,
+  // and q10, q11 and q15 carry their order through pinned exchanges; their
+  // oracle compare must hold at other shuffle partition counts too.
+  private val partitionSensitive = Set("q10_recent_events", "q11_count_events_window", "q15_retention_cutoff",
+    "q23_kde_density", "q24_kde_diff", "q25_dbscan_clusters")
 
   for (partitions <- Seq(1, 7))
-    test(s"q23, q24 and q25 match their oracles at spark.sql.shuffle.partitions=$partitions") {
+    test(s"q10, q11, q15, q23, q24 and q25 match their oracles at spark.sql.shuffle.partitions=$partitions") {
       // A new session, so the conf shared by every suite stays as it is.
       val session = spark.newSession()
       session.conf.set("spark.sql.shuffle.partitions", partitions.toString)
-      check(session, foldOrderSensitive, foldOrderSensitive.size)
+      check(session, partitionSensitive, partitionSensitive.size)
     }
 }

@@ -93,10 +93,12 @@ class OrderContractSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   private def rangeExchanges(df: DataFrame): Seq[Int] =
     exchanges(df).collect { case r: RangePartitioning => r.numPartitions }
 
-  test("q11, q15, q23, q24 and q25 sort their bounded outputs in one partition, with no range exchange") {
+  test("q1, q2, q4, q11, q15, q18, q21, q23, q24 and q25 sort their bounded outputs in one partition, with no range exchange") {
     // q24 also pivots its (tag, cell) rows per cell in that one partition.
     def byCell(h: HashPartitioning) = h.expressions.flatMap(_.references.map(_.name)).toSet == Set("cell_x", "cell_y")
-    val bounded   = Seq("q11_count_events_window", "q15_retention_cutoff", "q23_kde_density", "q24_kde_diff", "q25_dbscan_clusters")
+    val bounded = Seq("q1_pricing_summary", "q2_revenue_by_nation", "q4_priority_with_late_items", "q11_count_events_window",
+      "q15_retention_cutoff", "q18_event_window_lookup", "q21_bbox_filter", "q23_kde_density", "q24_kde_diff",
+      "q25_dbscan_clusters")
     val offending = for (name <- bounded) yield
       name -> exchanges(SparkEntry.queries(name)(spark, sf)).filter {
         case _: RangePartitioning => true
@@ -117,20 +119,21 @@ class OrderContractSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(offending.forall(_._2.isEmpty), offending)
   }
 
-  test("the window and detection queries' warm job counts, build + execute: q10 0 + 6, q11 0 + 4, q15 0 + 4, q23 0 + 7, q24 0 + 7, q25 2 + 1") {
+  test("the window and detection queries' warm job counts, build + execute: q10 0 + 4, q11 0 + 2, q15 0 + 2, q23 0 + 5, q24 0 + 5, q25 2 + 1") {
     val expected = Seq(
-      "q10_recent_events"       -> (0, 6),
-      "q11_count_events_window" -> (0, 4),
-      "q15_retention_cutoff"    -> (0, 4),
-      "q23_kde_density"         -> (0, 7),
-      "q24_kde_diff"            -> (0, 7),
+      "q10_recent_events"       -> (0, 4),
+      "q11_count_events_window" -> (0, 2),
+      "q15_retention_cutoff"    -> (0, 2),
+      "q23_kde_density"         -> (0, 5),
+      "q24_kde_diff"            -> (0, 5),
       "q25_dbscan_clusters"     -> (2, 1),
     )
     def jobs(body: => Unit): Int = TestListenerBus.jobs(spark.sparkContext)(body)
     def noop(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
     val counts = for ((name, _) <- expected) yield {
       // Warm: a first execution, so no count holds a table's one-off schema
-      // registration. q25's two build jobs are DBSCAN's placement probe.
+      // registration. The window anchor is read from the parquet footers,
+      // which is no job. q25's two build jobs are DBSCAN's placement probe.
       noop(SparkEntry.queries(name)(spark, sf))
       var df: DataFrame = null
       val build = jobs { df = SparkEntry.queries(name)(spark, sf) }
