@@ -133,10 +133,9 @@ object DBSCAN {
     ((math.floor(x / cellDeg).toLong + dx) << 32) | ((math.floor(y / cellDeg).toLong + dy) & 0xffffffffL)
 
   /** The kernel's eps test: the haversine formula operation for operation as
-    * q25's oracle SQL writes it (`2 * 6371.0088 * asin(sqrt(pow(sin(radians(
-    * b.y - a.y) / 2), 2) + cos(radians(a.y)) * cos(radians(b.y)) * pow(sin(
-    * radians(b.x - a.x) / 2), 2)))`) and [[Geo.haversineKm]] builds it, so
-    * only a pair within a rounding error of eps can differ between engines.
+    * [[Geo.haversineKm]] builds it and [[Geo.haversineKmSql]] writes it for
+    * q25's oracle, so only a pair within a rounding error of eps can differ
+    * between engines.
     */
   private def haversineKm(lon1: Double, lat1: Double, lon2: Double, lat2: Double): Double = {
     val dLat = math.toRadians(lat2 - lat1) / 2

@@ -128,8 +128,6 @@ object Tables {
   def customer(s: SparkSession, d: String): DataFrame   = table(s, d, "customer")
   def supplier(s: SparkSession, d: String): DataFrame   = table(s, d, "supplier")
   def nation(s: SparkSession, d: String): DataFrame     = table(s, d, "nation")
-  def region(s: SparkSession, d: String): DataFrame     = table(s, d, "region")
-  def part(s: SparkSession, d: String): DataFrame       = table(s, d, "part")
   /** `ts` as a timestamp. The local sf dirs store TIMESTAMP_MICROS, returned
     * as is. FIXTURES.md's TIMESTAMP(NANOS) layout, which the vectorized reader
     * rejects, arrives under `nanosAsLong` as a nano-epoch Long (the registered

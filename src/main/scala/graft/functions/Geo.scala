@@ -24,7 +24,8 @@ object Geo {
     lon >= west && lon <= east && lat >= south && lat <= north
 
   /** Great-circle distance in km between two lon/lat (degrees) points.
-    * 2R·asin(√(sin²(Δφ/2) + cosφ₁·cosφ₂·sin²(Δλ/2))).
+    * 2R·asin(√(sin²(Δφ/2) + cosφ₁·cosφ₂·sin²(Δλ/2))). [[haversineKmSql]] is
+    * the oracle's copy, operation for operation.
     */
   def haversineKm(lon1: Column, lat1: Column, lon2: Column, lat2: Column): Column = {
     val dLat = radians(lat2 - lat1) / 2
@@ -32,4 +33,7 @@ object Geo {
     val a = pow(sin(dLat), 2) + cos(radians(lat1)) * cos(radians(lat2)) * pow(sin(dLon), 2)
     lit(2 * EarthRadiusKm) * asin(sqrt(a))
   }
+  def haversineKmSql(lon1: String, lat1: String, lon2: String, lat2: String): String =
+    s"2 * $EarthRadiusKm * asin(sqrt(pow(sin(radians($lat2 - $lat1) / 2), 2) + " +
+      s"cos(radians($lat1)) * cos(radians($lat2)) * pow(sin(radians($lon2 - $lon1) / 2), 2)))"
 }

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.analytics.{DBSCAN, KDE}
@@ -98,16 +98,22 @@ object AnalyticsOps {
 
   private val grid = KDE.Grid(-180.0, 180.0, -90.0, 90.0, NX, NY)
 
-  /** A8/F5: weighted Gaussian KDE of the trailing-24 h activity on the grid.
-    * z is scaled to parts-per-million of probability density and rounded so
-    * the hash compare sees identical doubles despite fold-order divergence.
+  /** The density `z` in parts per million of probability density, rounded to
+    * 4 digits, so the hash compare sees identical doubles despite fold-order
+    * divergence. [[zPpmSql]] is the oracle's copy.
+    */
+  private val zPpm: Column = round(col("z") * lit(1000000.0), 4)
+  private val zPpmSql      = "round(z * 1000000.0, 4)"
+
+  /** A8/F5: weighted Gaussian KDE of the trailing-24 h activity on the grid,
+    * in [[zPpm]].
     */
   val qKdeDensity: QuerySpec = QuerySpec(
     "q23_kde_density",
     (s, d) =>
       KDE
         .densityByTag(taggedPoints(s, d).filter(col("tag") === "c"), grid, BW)
-        .select(col("cell_x"), col("cell_y"), round(col("z") * lit(1000000.0), 4).as("z_ppm"))
+        .select(col("cell_x"), col("cell_y"), zPpm.as("z_ppm"))
         // At most nx·ny rows at any scale: sorted in one partition, with no
         // range exchange and no sampling job.
         .coalesce(1)
@@ -116,7 +122,7 @@ object AnalyticsOps {
       WITH ${pointsSqlCte("c", 0, 24)},
       $gridSqlCte,
       ${densitySqlCtes("c")}
-      SELECT cell_x, cell_y, round(z * 1000000.0, 4) AS z_ppm
+      SELECT cell_x, cell_y, $zPpmSql AS z_ppm
       FROM z_c
       ORDER BY cell_x, cell_y
     """.stripMargin.trim),
@@ -126,7 +132,7 @@ object AnalyticsOps {
     * windows; a cell "fires" where the density increase exceeds the threshold
     * (`data_utils.py:225-227`, `app.py:617-620`).
     *
-    * Each density is rounded to 4 digits of ppm FIRST (exactly the q23
+    * Each density is rounded to [[zPpm]] FIRST (exactly the q23
     * contract, which hash-matches) and the diff is taken over the rounded
     * values — diffing the raw sums amplified fold-order ULP divergence between
     * engines into the last rounded digit in round 2 (hash_match=false). The
@@ -155,8 +161,8 @@ object AnalyticsOps {
         .coalesce(1)
         .groupBy(col("cell_x"), col("cell_y"))
         .agg(
-          max(when(col("tag") === "c", round(col("z") * lit(1000000.0), 4))).as("zc"),
-          max(when(col("tag") === "p", round(col("z") * lit(1000000.0), 4))).as("zp"),
+          max(when(col("tag") === "c", zPpm)).as("zc"),
+          max(when(col("tag") === "p", zPpm)).as("zp"),
         )
         .filter(col("zc").isNotNull && col("zp").isNotNull)
         .select(
@@ -173,8 +179,8 @@ object AnalyticsOps {
       $gridSqlCte,
       ${densitySqlCtes("c")},
       ${densitySqlCtes("p")},
-      rc AS (SELECT cell_x, cell_y, round(z * 1000000.0, 4) AS zc FROM z_c),
-      rp AS (SELECT cell_x, cell_y, round(z * 1000000.0, 4) AS zp FROM z_p)
+      rc AS (SELECT cell_x, cell_y, $zPpmSql AS zc FROM z_c),
+      rp AS (SELECT cell_x, cell_y, $zPpmSql AS zp FROM z_p)
       SELECT rc.cell_x, rc.cell_y,
              round(rc.zc - rp.zp, 4) AS z_diff_ppm,
              round(rc.zc - rp.zp, 4) > 5.0 AS fired
@@ -220,10 +226,7 @@ object AnalyticsOps {
           ON b.cx BETWEEN a.cx - 1 AND a.cx + 1
          AND b.cy BETWEEN a.cy - 1 AND a.cy + 1
          AND a.id <> b.id
-         AND 2 * 6371.0088 * asin(sqrt(
-               pow(sin(radians(b.y - a.y) / 2), 2) +
-               cos(radians(a.y)) * cos(radians(b.y)) *
-               pow(sin(radians(b.x - a.x) / 2), 2))) <= 300.0),
+         AND ${Geo.haversineKmSql("a.x", "a.y", "b.x", "b.y")} <= 300.0),
       nbrw AS (SELECT a AS id, sum(bw) AS nw FROM edges GROUP BY a),
       cores AS (
         SELECT p.id FROM bpts p LEFT JOIN nbrw n ON n.id = p.id

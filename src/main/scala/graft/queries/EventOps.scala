@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -34,6 +34,18 @@ object EventOps {
     Tables.newestTs(ev).getOrElse(ev.agg(max(col("ts"))).scalar())
   private[queries] val anchorSql = "(SELECT max(ts) FROM events)"
 
+  /** The events of the trailing `interval` (e.g. `"24 HOURS"`): one
+    * [[Tables.events]] handle filtered on `ts >= anchor − interval`, with
+    * the anchor read from that same handle, so it covers exactly the files
+    * the query scans and a second handle's listing never enters the build.
+    * [[trailingSql]] is the oracle's copy of the predicate.
+    */
+  private[queries] def trailing(s: SparkSession, d: String, interval: String): DataFrame = {
+    val ev = Tables.events(s, d)
+    ev.filter(col("ts") >= anchor(ev) - expr(s"INTERVAL $interval"))
+  }
+  private[queries] def trailingSql(interval: String): String = s"ts >= $anchorSql - INTERVAL $interval"
+
   /** Per-user recency rank: 1 for each user's earliest row, by (ts,
     * event_id), within every distinct (user_id, `keys`…) group.
     */
@@ -66,12 +78,8 @@ object EventOps {
       // re-reads that (small, 24 h window) shuffle output instead of
       // re-scanning the table: one scan at any scale, and the extra exchange
       // carries only the filtered window.
-      val ev = Tables.events(s, d)
-      ev
-        .filter(
-          col("ts") >= anchor(ev) - expr("INTERVAL 24 HOURS") &&
-            (col("event_type").isin("click", "view") || col("event_type").isNull),
-        )
+      trailing(s, d, "24 HOURS")
+        .filter(col("event_type").isin("click", "view") || col("event_type").isNull)
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
         .repartition(Tables.shufflePartitions(s), col("event_id"))
         .orderBy(col("ts").desc, col("event_id"))
@@ -79,7 +87,7 @@ object EventOps {
     Some(s"""
       SELECT event_id, ts, user_id, event_type, value
       FROM events
-      WHERE ts >= $anchorSql - INTERVAL 24 HOUR
+      WHERE ${trailingSql("24 HOURS")}
         AND (event_type IN ('click', 'view') OR event_type IS NULL)
       ORDER BY ts DESC, event_id
     """.stripMargin.trim),
@@ -88,20 +96,18 @@ object EventOps {
   /** Q2: windowed count per type (`data_base.py:276-305`). */
   val qCountWindow: QuerySpec = QuerySpec(
     "q11_count_events_window",
-    (s, d) => {
-      val ev = Tables.events(s, d)
-      ev.filter(col("ts") >= anchor(ev) - expr("INTERVAL 72 HOURS"))
+    (s, d) =>
+      trailing(s, d, "72 HOURS")
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"), round(sum(col("value")), 4).as("sum_value"))
         // One row per event_type at any scale: sorted in one partition, with
         // no range exchange and no sampling job.
         .coalesce(1)
-        .orderBy(col("event_type"))
-    },
+        .orderBy(col("event_type")),
     Some(s"""
       SELECT event_type, count(*) AS n, round(sum(value), 4) AS sum_value
       FROM events
-      WHERE ts >= $anchorSql - INTERVAL 72 HOUR
+      WHERE ${trailingSql("72 HOURS")}
       GROUP BY event_type
       ORDER BY event_type
     """.stripMargin.trim),
@@ -161,20 +167,18 @@ object EventOps {
     */
   val qRetention: QuerySpec = QuerySpec(
     "q15_retention_cutoff",
-    (s, d) => {
-      val ev = Tables.events(s, d)
-      ev.filter(col("ts") >= anchor(ev) - expr("INTERVAL 7 DAYS"))
+    (s, d) =>
+      trailing(s, d, "7 DAYS")
         .groupBy(date_trunc("day", col("ts")).as("day"))
         .agg(count(lit(1)).as("n_kept"))
         // At most 8 days in a 7-day window at any scale: sorted in one
         // partition, with no range exchange and no sampling job.
         .coalesce(1)
-        .orderBy(col("day"))
-    },
+        .orderBy(col("day")),
     Some(s"""
       SELECT date_trunc('day', ts) AS day, count(*) AS n_kept
       FROM events
-      WHERE ts >= $anchorSql - INTERVAL 7 DAY
+      WHERE ${trailingSql("7 DAYS")}
       GROUP BY day
       ORDER BY day
     """.stripMargin.trim),

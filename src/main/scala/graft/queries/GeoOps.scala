@@ -64,10 +64,7 @@ object GeoOps {
         .limit(2000),
     Some(s"""
       SELECT event_id,
-             round(2 * 6371.0088 * asin(sqrt(
-               pow(sin(radians(lat - 0.0) / 2), 2) +
-               cos(radians(0.0)) * cos(radians(lat)) *
-               pow(sin(radians(lon - 0.0) / 2), 2))), 3) AS dist_km
+             round(${Geo.haversineKmSql("0.0", "0.0", "lon", "lat")}, 3) AS dist_km
       FROM (SELECT event_id,
                    $lonSql AS lon,
                    $latSql AS lat

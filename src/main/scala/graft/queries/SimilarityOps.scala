@@ -63,11 +63,22 @@ object SimilarityOps {
 
   private val normedSqlCte =
     """normed AS (
-      |  SELECT vec_id, label,
-      |         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v,
-      |         sqrt(list_dot_product(list_transform(embedding, x -> CAST(x AS DOUBLE)),
-      |                               list_transform(embedding, x -> CAST(x AS DOUBLE)))) AS nrm
-      |  FROM embeddings)""".stripMargin
+      |  SELECT vec_id, label, v, sqrt(list_dot_product(v, v)) AS nrm
+      |  FROM (SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+      |        FROM embeddings))""".stripMargin
+
+  /** The brute-force pair queries' sides, `(a_id, va, na)` range-clustered
+    * for streaming (see [[normedRanged]]) and `(b_id, vb, nb)` to broadcast.
+    */
+  private def pairSides(s: SparkSession, d: String): (DataFrame, DataFrame) =
+    (normedRanged(s, d).select(col("vec_id").as("a_id"), col("v").as("va"), col("nrm").as("na")),
+     normed(s, d).select(col("vec_id").as("b_id"), col("v").as("vb"), col("nrm").as("nb")))
+
+  /** The cosine similarity of a pair's sides `(va, na)` and `(vb, nb)`.
+    * [[cosineSql]] is the oracle's copy over the `normed` rows `a` and `b`.
+    */
+  private val cosine: Column = vecDot(col("va"), col("vb")) / (col("na") * col("nb"))
+  private val cosineSql      = "list_dot_product(a.v, b.v) / (a.nrm * b.nrm)"
 
   /** L2 norms + dimensionality — the scalar warm-up that pins the float→double
     * widening contract between engine and oracle.
@@ -167,11 +178,9 @@ object SimilarityOps {
       // materialization boundary + range sort, whose sampling re-executed the
       // post-join stage) both disappear, and the O(n²) join runs wide instead
       // of on the scan's single input split.
-      val a = normedRanged(s, d)
-        .select(col("vec_id").as("a_id"), col("v").as("va"), col("nrm").as("na"))
-      val b = normed(s, d).select(col("vec_id").as("b_id"), col("v").as("vb"), col("nrm").as("nb"))
+      val (a, b) = pairSides(s, d)
       a.join(broadcast(b), col("a_id") < col("b_id"))
-        .withColumn("sim", vecDot(col("va"), col("vb")) / (col("na") * col("nb")))
+        .withColumn("sim", cosine)
         .filter(col("sim") >= 0.4)
         .select(col("a_id"), col("b_id"))
         .sortWithinPartitions(col("a_id"), col("b_id"))
@@ -180,7 +189,7 @@ object SimilarityOps {
       WITH $normedSqlCte
       SELECT a.vec_id AS a_id, b.vec_id AS b_id
       FROM normed a JOIN normed b ON a.vec_id < b.vec_id
-      WHERE list_dot_product(a.v, b.v) / (a.nrm * b.nrm) >= 0.4
+      WHERE $cosineSql >= 0.4
       ORDER BY a_id, b_id
     """.stripMargin.trim),
   )
@@ -205,9 +214,7 @@ object SimilarityOps {
   val qCosineTopK: QuerySpec = QuerySpec(
     "q43_cosine_topk",
     (s, d) => {
-      val a = normedRanged(s, d)
-        .select(col("vec_id").as("a_id"), col("v").as("va"), col("nrm").as("na"))
-      val b = normed(s, d).select(col("vec_id").as("b_id"), col("v").as("vb"), col("nrm").as("nb"))
+      val (a, b) = pairSides(s, d)
       a.join(broadcast(b), col("a_id") =!= col("b_id"))
         // sim is projected BELOW the aggregate on purpose (guide §2.3
         // "project before"): the whole-stage-codegen'd join+project stage
@@ -219,7 +226,7 @@ object SimilarityOps {
         // when the ObjectHashAggregate fallback then sorts those wide rows.
         .select(
           col("a_id"),
-          (vecDot(col("va"), col("vb")) / (col("na") * col("nb"))).as("sim"),
+          cosine.as("sim"),
           col("b_id"),
         )
         .groupBy(col("a_id"))
@@ -232,7 +239,7 @@ object SimilarityOps {
       WITH $normedSqlCte,
       sims AS (
         SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-               list_dot_product(a.v, b.v) / (a.nrm * b.nrm) AS sim
+               $cosineSql AS sim
         FROM normed a JOIN normed b ON a.vec_id <> b.vec_id),
       ranked AS (
         SELECT a_id, b_id,
@@ -290,7 +297,7 @@ object SimilarityOps {
       a.hint("shuffle_hash")
         .join(b.hint("shuffle_hash"), Seq("band", "bucket"))
         .filter(col("a_id") < col("b_id"))
-        .withColumn("sim", vecDot(col("va"), col("vb")) / (col("na") * col("nb")))
+        .withColumn("sim", cosine)
         .filter(col("sim") >= 0.3)
         .select(col("a_id"), col("b_id"), round(col("sim"), 4).as("sim"))
         .distinct() // a pair can match in both bands; sim is identical either way
@@ -311,10 +318,10 @@ object SimilarityOps {
       bucketed AS (
         $bandSelects)
       SELECT DISTINCT a.vec_id AS a_id, b.vec_id AS b_id,
-             round(list_dot_product(a.v, b.v) / (a.nrm * b.nrm), 4) AS sim
+             round($cosineSql, 4) AS sim
       FROM bucketed a JOIN bucketed b
         ON a.band = b.band AND a.bucket = b.bucket AND a.vec_id < b.vec_id
-      WHERE list_dot_product(a.v, b.v) / (a.nrm * b.nrm) >= 0.3
+      WHERE $cosineSql >= 0.3
       ORDER BY a_id, b_id
       """.stripMargin.trim
     },

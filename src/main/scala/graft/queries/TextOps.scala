@@ -21,12 +21,35 @@ import graft.core.{QuerySpec, Tables}
   */
 object TextOps {
 
-  /** Whitespace tokenization of lowercased text; drops empty tokens.
+  /** Tokenization of lowercased text on the separator regex `sep`, dropping
+    * empty tokens: [[Whitespace]] tokens, or q39's [[WordSep]] word tokens.
     * [[toksSql]] is the oracle's copy.
     */
-  private def toks: Column =
-    filter(split(lower(col("text")), "\\s+"), t => t =!= "")
-  private val toksSql = """list_filter(regexp_split_to_array(lower(text), '\s+'), tk -> tk <> '')"""
+  private def toks(sep: String): Column = filter(split(lower(col("text")), sep), t => t =!= "")
+  private def toksSql(sep: String): String =
+    s"list_filter(regexp_split_to_array(lower(text), '$sep'), tk -> tk <> '')"
+  private val Whitespace = """\s+"""
+  private val WordSep    = "[^a-z0-9]+"
+
+  /** The number of matches of the regex `re` in the lowercased text, as a
+    * long. [[markersSql]] is the oracle's copy.
+    */
+  private def markers(re: String): Column     = regexp_count(lower(col("text")), lit(re)).cast("long")
+  private def markersSql(re: String): String = s"len(regexp_extract_all(lower(text), '$re'))"
+
+  /** q31's stopwords and q32's per-language marker words, as word-bounded
+    * alternations.
+    */
+  private val StopWords = """\b(the|a|and|of|to|in|is)\b"""
+  private val EnMarkers = """\b(the|and|is|of|to)\b"""
+  private val EsMarkers = """\b(el|la|de|que|y)\b"""
+  private val FrMarkers = """\b(le|les|et|une|est)\b"""
+
+  /** The exact-dedup key of q33 and q34: md5 of the whitespace-normalized
+    * lowercased text. [[fingerprintSql]] is the oracle's copy.
+    */
+  private val fingerprint: Column = md5(trim(regexp_replace(lower(col("text")), Whitespace, " ")).cast("binary"))
+  private val fingerprintSql      = s"md5(trim(regexp_replace(lower(text), '$Whitespace', ' ', 'g')))"
 
   /** Word 3-gram shingles: one string per consecutive token triple.
     *
@@ -52,7 +75,7 @@ object TextOps {
     )
 
   private def docTokens(s: SparkSession, d: String): DataFrame =
-    Tables.documents(s, d).select(col("doc_id"), toks.as("toks"))
+    Tables.documents(s, d).select(col("doc_id"), toks(Whitespace).as("toks"))
 
   /** documents with the global doc_id order established at the SCAN, before
     * any expensive projection. A trailing `.orderBy(doc_id)` above a heavy
@@ -93,7 +116,7 @@ object TextOps {
       // lambda above references the computed column (see shingles() docs;
       // CollapseProject keeps them apart because toks is non-cheap and
       // referenced more than once).
-      .select(col("doc_id"), toks.as("toks"))
+      .select(col("doc_id"), toks(Whitespace).as("toks"))
       .select(col("doc_id"), array_distinct(shingles(col("toks"))).as("shs"))
 
   /** One MinHash slot computed inside the row: min over the shingle array of
@@ -105,7 +128,7 @@ object TextOps {
 
   private val shingleSqlCte =
     s"""t AS (SELECT doc_id,
-      |            $toksSql AS toks
+      |            ${toksSql(Whitespace)} AS toks
       |     FROM documents),
       |ds AS (SELECT DISTINCT doc_id,
       |              unnest(list_transform(range(1, len(toks) - 1),
@@ -128,7 +151,7 @@ object TextOps {
         .limit(100),
     Some(s"""
       SELECT token, count(*) AS n
-      FROM (SELECT unnest($toksSql) AS token
+      FROM (SELECT unnest(${toksSql(Whitespace)}) AS token
             FROM documents)
       GROUP BY token
       ORDER BY n DESC, token
@@ -147,13 +170,11 @@ object TextOps {
         .select(
           col("doc_id"),
           length(col("text")).cast("long").as("n_chars_calc"),
-          size(toks).cast("long").as("n_tokens"),
+          size(toks(Whitespace)).cast("long").as("n_tokens"),
           (length(col("text")) - length(regexp_replace(col("text"), "[.,!?;:]", "")))
             .cast("long")
             .as("n_punct"),
-          regexp_count(lower(col("text")), lit("\\b(the|a|and|of|to|in|is)\\b"))
-            .cast("long")
-            .as("n_stop"),
+          markers(StopWords).as("n_stop"),
         )
         .withColumn("stop_ratio", round(col("n_stop") / nullif(col("n_tokens"), lit(0)), 6))
         .withColumn(
@@ -170,9 +191,9 @@ object TextOps {
              round(least(n_tokens / 50.0, 1.0) * (1.0 - n_punct * 1.0 / nullif(n_chars_calc, 0)), 6) AS quality
       FROM (SELECT doc_id,
                    length(text) AS n_chars_calc,
-                   len($toksSql) AS n_tokens,
+                   len(${toksSql(Whitespace)}) AS n_tokens,
                    length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')) AS n_punct,
-                   len(regexp_extract_all(lower(text), '\\b(the|a|and|of|to|in|is)\\b')) AS n_stop
+                   ${markersSql(StopWords)} AS n_stop
             FROM documents)
       ORDER BY doc_id
     """.stripMargin.trim),
@@ -183,15 +204,14 @@ object TextOps {
     */
   val qLangId: QuerySpec = QuerySpec(
     "q32_lang_id",
-    (s, d) => {
-      val lowered = lower(col("text"))
+    (s, d) =>
       docsByIdSorted(s, d)
         .select(
           col("doc_id"),
           col("lang"),
-          regexp_count(lowered, lit("\\b(the|and|is|of|to)\\b")).cast("long").as("en_score"),
-          regexp_count(lowered, lit("\\b(el|la|de|que|y)\\b")).cast("long").as("es_score"),
-          regexp_count(lowered, lit("\\b(le|les|et|une|est)\\b")).cast("long").as("fr_score"),
+          markers(EnMarkers).as("en_score"),
+          markers(EsMarkers).as("es_score"),
+          markers(FrMarkers).as("fr_score"),
         )
         .withColumn(
           "lang_pred",
@@ -199,21 +219,18 @@ object TextOps {
             .when(col("es_score") >= col("fr_score"), "es")
             .otherwise("fr"),
         )
-        .withColumn("is_match", col("lang_pred") === col("lang"))
-    },
-    Some("""
-      SELECT doc_id, lang, en_score, es_score, fr_score,
-             CASE WHEN en_score >= es_score AND en_score >= fr_score THEN 'en'
-                  WHEN es_score >= fr_score THEN 'es'
-                  ELSE 'fr' END AS lang_pred,
-             (CASE WHEN en_score >= es_score AND en_score >= fr_score THEN 'en'
-                   WHEN es_score >= fr_score THEN 'es'
-                   ELSE 'fr' END) = lang AS is_match
-      FROM (SELECT doc_id, lang,
-                   len(regexp_extract_all(lower(text), '\b(the|and|is|of|to)\b')) AS en_score,
-                   len(regexp_extract_all(lower(text), '\b(el|la|de|que|y)\b')) AS es_score,
-                   len(regexp_extract_all(lower(text), '\b(le|les|et|une|est)\b')) AS fr_score
-            FROM documents)
+        .withColumn("is_match", col("lang_pred") === col("lang")),
+    Some(s"""
+      SELECT doc_id, lang, en_score, es_score, fr_score, lang_pred, lang_pred = lang AS is_match
+      FROM (SELECT *,
+                   CASE WHEN en_score >= es_score AND en_score >= fr_score THEN 'en'
+                        WHEN es_score >= fr_score THEN 'es'
+                        ELSE 'fr' END AS lang_pred
+            FROM (SELECT doc_id, lang,
+                         ${markersSql(EnMarkers)} AS en_score,
+                         ${markersSql(EsMarkers)} AS es_score,
+                         ${markersSql(FrMarkers)} AS fr_score
+                  FROM documents))
       ORDER BY doc_id
     """.stripMargin.trim),
   )
@@ -225,12 +242,9 @@ object TextOps {
     "q33_doc_fingerprint",
     (s, d) =>
       docsByIdSorted(s, d)
-        .select(
-          col("doc_id"),
-          md5(trim(regexp_replace(lower(col("text")), "\\s+", " ")).cast("binary")).as("fp"),
-        ),
-    Some("""
-      SELECT doc_id, md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fp
+        .select(col("doc_id"), fingerprint.as("fp")),
+    Some(s"""
+      SELECT doc_id, $fingerprintSql AS fp
       FROM documents
       ORDER BY doc_id
     """.stripMargin.trim),
@@ -242,22 +256,20 @@ object TextOps {
     */
   val qDedupExact: QuerySpec = QuerySpec(
     "q34_dedup_exact",
-    (s, d) => {
-      val fp = trim(regexp_replace(lower(col("text")), "\\s+", " "))
+    (s, d) =>
       Tables
         .documents(s, d)
-        .select(col("doc_id"), md5(fp.cast("binary")).as("fp"))
+        .select(col("doc_id"), fingerprint.as("fp"))
         .withColumn(
           "rn",
           row_number().over(Window.partitionBy(col("fp")).orderBy(col("doc_id"))),
         )
         .filter(col("rn") === 1)
         .select(col("doc_id"), col("fp"))
-        .orderBy(col("doc_id"))
-    },
-    Some("""
+        .orderBy(col("doc_id")),
+    Some(s"""
       SELECT doc_id, fp
-      FROM (SELECT doc_id, md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fp,
+      FROM (SELECT doc_id, $fingerprintSql AS fp,
                    row_number() OVER (PARTITION BY fp ORDER BY doc_id) AS rn
             FROM documents)
       WHERE rn = 1
@@ -480,7 +492,7 @@ object TextOps {
       }.mkString(" ||\n             ")
       s"""
       WITH tok AS (SELECT DISTINCT doc_id,
-                          unnest($toksSql) AS token
+                          unnest(${toksSql(Whitespace)}) AS token
                    FROM documents),
       h AS (SELECT doc_id, md5(token) AS h FROM tok),
       v AS (SELECT doc_id,
@@ -503,16 +515,14 @@ object TextOps {
       docsByIdSorted(s, d)
         .select(
           col("doc_id"),
-          size(toks).cast("long").as("n_ws_tokens"),
-          size(filter(split(lower(col("text")), "[^a-z0-9]+"), t => t =!= ""))
-            .cast("long")
-            .as("n_word_tokens"),
+          size(toks(Whitespace)).cast("long").as("n_ws_tokens"),
+          size(toks(WordSep)).cast("long").as("n_word_tokens"),
           ceil(length(col("text")) / lit(4.0)).cast("long").as("n_bpe_est"),
         ),
     Some(s"""
       SELECT doc_id,
-             len($toksSql) AS n_ws_tokens,
-             len(list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), tk -> tk <> '')) AS n_word_tokens,
+             len(${toksSql(Whitespace)}) AS n_ws_tokens,
+             len(${toksSql(WordSep)}) AS n_word_tokens,
              CAST(ceil(length(text) / 4.0) AS BIGINT) AS n_bpe_est
       FROM documents
       ORDER BY doc_id

@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.TestListenerBus
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning, RangePartitioning}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
@@ -23,11 +23,12 @@ import graft.SparkEntry
   * shapes are actually exercised (sf0.001 leaves several outputs at 0–1
   * rows).
   *
-  * It also pins the exchanges behind the order: the bounded outputs sorted
-  * in one partition carry no range exchange, and a pinned range exchange
-  * takes its partition count from the session conf. The windowed event
-  * queries read their anchor with no join, and the warm job counts of the
-  * windowed and detection queries are pinned.
+  * The contracts are checked again at 1 and 7 shuffle partitions. It also
+  * pins the exchanges behind the order: the bounded outputs sorted in one
+  * partition carry no range exchange, and a pinned range exchange takes its
+  * partition count from the session conf. The windowed event queries read
+  * their anchor with no join, and the warm job counts of the windowed and
+  * detection queries are pinned.
   */
 class OrderContractSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
@@ -68,17 +69,34 @@ class OrderContractSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     "q43_cosine_topk",
   )
 
+  /** Asserts that `name`'s output, built and run in `session`, arrives in its
+    * declared global order.
+    */
+  private def assertOrdered(session: SparkSession, name: String): Unit = {
+    val key  = keyOf(name)
+    // The exact funnel Verify uses: physical partition order concatenated.
+    val rows = SparkEntry.queries(name)(session, sf).coalesce(1).collect()
+    assert(rows.length > 1, s"$name returned ${rows.length} rows at sf0.01 — too few to check order")
+    val keys = rows.toSeq.map(key)
+    val violations = keys.sliding(2).zipWithIndex.collect {
+      case (Seq(a, b), i) if Ordering.Implicits.seqOrdering[Seq, Long].gt(a, b) => (i, a, b)
+    }.take(3).toList
+    assert(violations.isEmpty, s"$name order violations (index, prev, next): $violations")
+  }
+
   for (name <- guarded)
     test(s"$name output arrives in its declared global order through coalesce(1)") {
-      val key  = keyOf(name)
-      // The exact funnel Verify uses: physical partition order concatenated.
-      val rows = SparkEntry.queries(name)(spark, sf).coalesce(1).collect()
-      assert(rows.length > 1, s"$name returned ${rows.length} rows at sf0.01 — too few to check order")
-      val keys = rows.toSeq.map(key)
-      val violations = keys.sliding(2).zipWithIndex.collect {
-        case (Seq(a, b), i) if Ordering.Implicits.seqOrdering[Seq, Long].gt(a, b) => (i, a, b)
-      }.take(3).toList
-      assert(violations.isEmpty, s"$name order violations (index, prev, next): $violations")
+      assertOrdered(spark, name)
+    }
+
+  // The range exchanges behind the order take the session's partition count,
+  // so the contracts must hold at other counts too (q16's is pinned below).
+  for (partitions <- Seq(1, 7))
+    test(s"q10, q31–q33, q35, q39, q40, q42 and q43 arrive in their declared global order at spark.sql.shuffle.partitions=$partitions") {
+      // A new session, so the conf shared by every suite stays as it is.
+      val session = spark.newSession()
+      session.conf.set("spark.sql.shuffle.partitions", partitions.toString)
+      guarded.filterNot(_ == "q16_user_activity_decay").foreach(assertOrdered(session, _))
     }
 
   /** The partitionings of the shuffle exchanges in `df`'s executed plan,
