@@ -35,14 +35,7 @@ object Verify {
     new java.io.File(outDir).mkdirs()
     val failed = SparkEntry.queries.toSeq.sortBy(_._1).filter { case (name, _) => keep(name) }.flatMap {
       case (name, fn) =>
-        // coalesce(1) is LOAD-BEARING for the order-sensitive oracle compare:
-        // it concatenates partitions IN ORDER into the single output file.
-        // q16, q31–q33, q35, q39, q40, q42 and q43 carry their global output
-        // order as "range partitions are contiguous + rows are sorted within
-        // each partition" rather than a logical Sort, so replacing this with
-        // repartition(1) or a multi-file write would silently scramble that
-        // order and fail the hash compare. OrderContractSpec pins each such
-        // query's order contract at the DataFrame level as a second guard.
+        // One file: coalesce(1) concatenates the partitions in order.
         try {
           fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
           None

@@ -163,16 +163,22 @@ object Tables {
   def shufflePartitions(s: SparkSession): Int =
     s.conf.getOption("spark.sql.shuffle.partitions").flatMap(_.toIntOption).getOrElse(200)
 
-  /** Range exchange of `df` on `keys` into [[shufflePartitions]] partitions —
-    * the one partition-and-order operator of every query that carries its
-    * global output order physically. Range partitions are contiguous and
-    * ordered by `keys`, so a `sortWithinPartitions` led by the same keys gives
-    * the global order with no further exchange, and the projections above
-    * keep it (OrderContractSpec pins each such query). The pinned count keeps
-    * the compute-heavy stages above the exchange wide.
+  /** Range exchange of `df` on `keys` into [[shufflePartitions]] partitions,
+    * placed below a query's heavy projections. A final `orderBy` led by the
+    * same keys reuses it: range partitions are contiguous and ordered by
+    * `keys`, so the sort needs no exchange of its own, and no range sampling
+    * pass runs the projections twice. The pinned count keeps the
+    * compute-heavy stages above the exchange wide.
     */
   def rangeClustered(df: DataFrame, keys: Column*): DataFrame =
     df.repartitionByRange(shufflePartitions(df.sparkSession), keys: _*)
+
+  /** `df` sorted on `keys` in one partition, for an output that a key domain
+    * bounds at any scale (types, nations, days, grid cells): its rows fit one
+    * task, so the sort needs no range exchange and no sampling job.
+    */
+  def sortedInOne(df: DataFrame, keys: Column*): DataFrame =
+    df.coalesce(1).orderBy(keys: _*)
 }
 
 /** One externally-verifiable query: a Spark plan plus (optionally) equivalent

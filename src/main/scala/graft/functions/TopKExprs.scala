@@ -23,13 +23,11 @@ import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, Double
   * super-linear step left in the plan.
   *
   * Ordering semantics match Spark's SQL sort on (score DESC NULLS LAST,
-  * id ASC) for the non-null input this aggregate sees: doubles compare with
-  * NaN greater than every value and all NaNs equal (`nanSafeCompareDoubles`),
-  * ties break on ascending id. Null scores/ids are skipped defensively —
-  * row_number over a null sim would rank it after all non-null sims (NULLS
-  * LAST), so skipping only diverges if a key has fewer than k non-null
-  * candidates, which the cosine queries cannot produce (norms are finite and
-  * positive for non-empty float vectors).
+  * id ASC): doubles compare with NaN greater than every value and all NaNs
+  * equal (`nanSafeCompareDoubles`), a null score ranks after every non-null
+  * one, and ties break on ascending id. A row with a null id is skipped, as
+  * the ids are the output; q43's ids are non-null vec_ids, while its scores
+  * are null wherever a vector is.
   *
   * The merge path makes partial aggregation safe: map-side buffers of ≤ k
   * entries merge by replaying one buffer's entries into the other, so the
@@ -61,15 +59,17 @@ case class TopKIds(
   override def createAggregationBuffer(): TopKIds.Buffer = new TopKIds.Buffer(k)
 
   override def update(buf: TopKIds.Buffer, input: InternalRow): TopKIds.Buffer = {
-    val s = score.eval(input)
     val i = id.eval(input)
-    if (s != null && i != null) buf.insert(s.asInstanceOf[Double], i.asInstanceOf[Long])
+    if (i != null) score.eval(input) match {
+      case null      => buf.insert(0.0, i.asInstanceOf[Long], isNull = true)
+      case s: Double => buf.insert(s, i.asInstanceOf[Long])
+    }
     buf
   }
 
   override def merge(buf: TopKIds.Buffer, other: TopKIds.Buffer): TopKIds.Buffer = {
     var j = 0
-    while (j < other.n) { buf.insert(other.scores(j), other.ids(j)); j += 1 }
+    while (j < other.n) { buf.insert(other.scores(j), other.ids(j), other.nulls(j)); j += 1 }
     buf
   }
 
@@ -80,10 +80,13 @@ case class TopKIds(
   }
 
   override def serialize(buf: TopKIds.Buffer): Array[Byte] = {
-    val bb = ByteBuffer.allocate(4 + 16 * buf.n)
+    val bb = ByteBuffer.allocate(4 + 17 * buf.n)
     bb.putInt(buf.n)
     var j = 0
-    while (j < buf.n) { bb.putDouble(buf.scores(j)); bb.putLong(buf.ids(j)); j += 1 }
+    while (j < buf.n) {
+      bb.putDouble(buf.scores(j)).putLong(buf.ids(j)).put((if (buf.nulls(j)) 1 else 0).toByte)
+      j += 1
+    }
     bb.array()
   }
 
@@ -96,7 +99,7 @@ case class TopKIds(
       val s = bb.getDouble()
       val i = bb.getLong()
       // entries arrive already rank-ordered; insert preserves that cheaply
-      buf.insert(s, i)
+      buf.insert(s, i, isNull = bb.get() != 0)
       j += 1
     }
     buf
@@ -130,33 +133,40 @@ object TopKIds {
     }
 
   /** Fixed-capacity rank-ordered buffer: slot 0 is the current best
-    * (score DESC, id ASC). Insertion shifts at most k−1 entries — k is a small
-    * constant (3 for q43), so this is branch-cheap and allocation-free.
+    * (score DESC NULLS LAST, id ASC); `nulls(j)` marks a null score, whose
+    * `scores(j)` is unused. Insertion shifts at most k−1 entries — k is a
+    * small constant (3 for q43), so this is branch-cheap and allocation-free.
     */
   final class Buffer(val k: Int) {
     val scores = new Array[Double](k)
+    val nulls  = new Array[Boolean](k)
     val ids    = new Array[Long](k)
     var n      = 0
 
-    /** True iff (s1,i1) ranks strictly before (s2,i2). */
-    private def beats(s1: Double, i1: Long, s2: Double, i2: Long): Boolean = {
-      val c = cmpScore(s1, s2)
-      c > 0 || (c == 0 && i1 < i2)
+    /** True iff (s1,i1), null iff `n1`, ranks strictly before entry `j`. */
+    private def beats(n1: Boolean, s1: Double, i1: Long, j: Int): Boolean = {
+      val c =
+        if (n1 || nulls(j)) java.lang.Boolean.compare(nulls(j), n1)
+        else cmpScore(s1, scores(j))
+      c > 0 || (c == 0 && i1 < ids(j))
     }
 
-    def insert(s: Double, i: Long): Unit = {
-      if (n == k && !beats(s, i, scores(n - 1), ids(n - 1))) return
+    /** Offers the entry (`s`, `i`), whose score is null iff `isNull`. */
+    def insert(s: Double, i: Long, isNull: Boolean = false): Unit = {
+      if (n == k && !beats(isNull, s, i, n - 1)) return
       // find insertion position among the current n entries
       var pos = n
-      while (pos > 0 && beats(s, i, scores(pos - 1), ids(pos - 1))) pos -= 1
+      while (pos > 0 && beats(isNull, s, i, pos - 1)) pos -= 1
       val last = math.min(n, k - 1) // index that shifting may write up to
       var j    = last
       while (j > pos) {
         scores(j) = scores(j - 1)
+        nulls(j) = nulls(j - 1)
         ids(j) = ids(j - 1)
         j -= 1
       }
       scores(pos) = s
+      nulls(pos) = isNull
       ids(pos) = i
       if (n < k) n += 1
     }

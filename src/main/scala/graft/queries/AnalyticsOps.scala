@@ -114,10 +114,7 @@ object AnalyticsOps {
       KDE
         .densityByTag(taggedPoints(s, d).filter(col("tag") === "c"), grid, BW)
         .select(col("cell_x"), col("cell_y"), zPpm.as("z_ppm"))
-        // At most nx·ny rows at any scale: sorted in one partition, with no
-        // range exchange and no sampling job.
-        .coalesce(1)
-        .orderBy(col("cell_x"), col("cell_y")),
+        .transform(Tables.sortedInOne(_, col("cell_x"), col("cell_y"))),
     Some(s"""
       WITH ${pointsSqlCte("c", 0, 24)},
       $gridSqlCte,

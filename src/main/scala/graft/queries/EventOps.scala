@@ -100,10 +100,7 @@ object EventOps {
       trailing(s, d, "72 HOURS")
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"), round(sum(col("value")), 4).as("sum_value"))
-        // One row per event_type at any scale: sorted in one partition, with
-        // no range exchange and no sampling job.
-        .coalesce(1)
-        .orderBy(col("event_type")),
+        .transform(Tables.sortedInOne(_, col("event_type"))),
     Some(s"""
       SELECT event_type, count(*) AS n, round(sum(value), 4) AS sum_value
       FROM events
@@ -171,10 +168,7 @@ object EventOps {
       trailing(s, d, "7 DAYS")
         .groupBy(date_trunc("day", col("ts")).as("day"))
         .agg(count(lit(1)).as("n_kept"))
-        // At most 8 days in a 7-day window at any scale: sorted in one
-        // partition, with no range exchange and no sampling job.
-        .coalesce(1)
-        .orderBy(col("day")),
+        .transform(Tables.sortedInOne(_, col("day"))),
     Some(s"""
       SELECT date_trunc('day', ts) AS day, count(*) AS n_kept
       FROM events
@@ -192,23 +186,18 @@ object EventOps {
     */
   val qUserDecay: QuerySpec = QuerySpec(
     "q16_user_activity_decay",
-    // One exchange total (was two + a range-sample re-execution of the window
-    // stage): the window's required distribution (clustered by user_id) and
-    // ordering (user_id, ts, event_id) are established with a single RANGE
-    // exchange + in-partition sort, which simultaneously IS the output order —
-    // (user_id, rn) ≡ (user_id, ts, event_id) because rn ranks by (ts,
-    // event_id) within user_id. Range partitioning keeps equal user_ids in one
-    // partition, so the window never crosses partitions; the trailing
-    // orderBy(user_id, rn) exchange+sort disappears (guide §2.4: window keyed
-    // like a neighboring operation shares one exchange).
+    // One exchange: the range exchange on user_id clusters the window's
+    // users, and the window's sort on (user_id, ts, event_id) is already the
+    // declared order — (user_id, rn) ≡ (user_id, ts, event_id) — so the final
+    // orderBy adds neither an exchange nor a sort. The count is pinned so AQE
+    // cannot coalesce the exchange to one partition and serialize the window
+    // (see Tables.shufflePartitions).
     (s, d) => {
       val ev = Tables.events(s, d).select(col("event_id"), col("ts"), col("user_id"))
-      // Pinned count so AQE cannot coalesce the range exchange to one
-      // partition and serialize the window (see Tables.shufflePartitions).
       Tables
         .rangeClustered(ev, col("user_id"))
-        .sortWithinPartitions(col("user_id"), col("ts"), col("event_id"))
         .withColumn("rn", userRank())
+        .orderBy(col("user_id"), col("ts"), col("event_id"))
         .select(
           col("event_id"),
           col("user_id"),
@@ -269,10 +258,7 @@ object EventOps {
         )
         .groupBy(col("anchor_id"))
         .agg(count(lit(1)).as("n_in_window"), round(sum(col("value")), 4).as("sum_value"))
-        // At most 5 anchors (the limit above) at any scale: sorted in one
-        // partition, with no range exchange and no sampling job.
-        .coalesce(1)
-        .orderBy(col("anchor_id"))
+        .transform(Tables.sortedInOne(_, col("anchor_id")))
     },
     Some("""
       WITH anchors AS (

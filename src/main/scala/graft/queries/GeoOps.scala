@@ -35,10 +35,7 @@ object GeoOps {
         .filter(Geo.inbounds(lon, lat, -50.0, -30.0, 50.0, 30.0))
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"))
-        // One row per event_type at any scale: sorted in one partition, with
-        // no range exchange and no sampling job.
-        .coalesce(1)
-        .orderBy(col("event_type")),
+        .transform(Tables.sortedInOne(_, col("event_type"))),
     Some(s"""
       SELECT event_type, count(*) AS n
       FROM (SELECT event_type,

@@ -36,10 +36,7 @@ object Relational {
           round(avg(col("l_discount")), 4).as("avg_disc"),
           count(lit(1)).as("count_order"),
         )
-        // One row per (l_returnflag, l_linestatus), 4 in TPC-H at any scale:
-        // sorted in one partition, with no range exchange and no sampling job.
-        .coalesce(1)
-        .orderBy(col("l_returnflag"), col("l_linestatus")),
+        .transform(Tables.sortedInOne(_, col("l_returnflag"), col("l_linestatus"))),
     Some("""
       SELECT l_returnflag, l_linestatus,
              round(sum(l_quantity), 4) AS sum_qty,
@@ -74,10 +71,7 @@ object Relational {
             .as("revenue"),
           count(lit(1)).as("n_items"),
         )
-        // At most 25 nations at any scale: sorted in one partition, with no
-        // range exchange and no sampling job.
-        .coalesce(1)
-        .orderBy(col("n_name"))
+        .transform(Tables.sortedInOne(_, col("n_name")))
     },
     Some("""
       SELECT n_name,
@@ -135,10 +129,7 @@ object Relational {
         )
         .groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("n_orders"))
-        // 5 order priorities at any scale: sorted in one partition, with no
-        // range exchange and no sampling job.
-        .coalesce(1)
-        .orderBy(col("o_orderpriority"))
+        .transform(Tables.sortedInOne(_, col("o_orderpriority")))
     },
     Some("""
       SELECT o_orderpriority, count(*) AS n_orders

@@ -42,16 +42,16 @@ object SimilarityOps {
   private def normed(s: SparkSession, d: String): DataFrame = normedOf(Tables.embeddings(s, d))
 
   /** [[normed]] with a vec_id RANGE exchange on the raw scan, for the
-    * brute-force pair queries' STREAMED side. Two jobs at once (guide §2.6 +
-    * §2.5): (1) the O(n²) dot-product stage is partitioned by the cluster's
-    * shuffle parallelism instead of the input split count — the embeddings
-    * table is one tiny parquet split at bench scale, so the quadratic
-    * BroadcastNestedLoopJoin ran as a SINGLE task (PERF_r21 scaling ratio
-    * ≈1 for q42/q43); (2) range partitions are contiguous in vec_id, so
+    * brute-force pair queries' STREAMED side and q40. Two jobs at once (guide
+    * §2.6 + §2.5): (1) the O(n²) dot-product stage is partitioned by the
+    * cluster's shuffle parallelism instead of the input split count — the
+    * embeddings table is one tiny parquet split at bench scale, so the
+    * quadratic BroadcastNestedLoopJoin ran as a SINGLE task (PERF_r21 scaling
+    * ratio ≈1 for q42/q43); (2) range partitions are contiguous in vec_id, so
     * everything keyed or ordered by a_id downstream (q43's per-key aggregate,
-    * both queries' global output order) is satisfied by THIS one exchange —
-    * no later orderBy, hence no range-sampling double execution of the
-    * quadratic stage. The sampling pass for this exchange re-runs only the
+    * each query's final orderBy) reuses THIS one exchange — no range exchange
+    * of its own above the quadratic stage, whose sampling pass would run
+    * that stage twice. The sampling pass for this exchange re-runs only the
     * narrow scan below it (the norm projection sits above).
     */
   private def normedRanged(s: SparkSession, d: String): DataFrame =
@@ -85,16 +85,18 @@ object SimilarityOps {
     */
   val qNorms: QuerySpec = QuerySpec(
     "q40_embedding_norms",
-    // Global vec_id order established on the raw scan BEFORE the norm
-    // projection — a trailing orderBy would make the range partitioner's
-    // sampling pass compute every norm twice (guide §2.4).
+    // The vec_id range exchange sits on the raw scan, BELOW the norm
+    // projection, and the final orderBy reuses it: a range exchange of the
+    // sort's own would make its sampling pass compute every norm twice
+    // (guide §2.4).
     (s, d) =>
-      normedOf(Tables.rangeClustered(Tables.embeddings(s, d), col("vec_id")).sortWithinPartitions("vec_id"))
+      normedRanged(s, d)
         .select(
           col("vec_id"),
           size(col("v")).cast("long").as("dim"),
           round(col("nrm"), 4).as("l2_norm"),
-        ),
+        )
+        .orderBy(col("vec_id")),
     Some(s"""
       WITH $normedSqlCte
       SELECT vec_id, CAST(len(v) AS BIGINT) AS dim, round(nrm, 4) AS l2_norm
@@ -173,17 +175,17 @@ object SimilarityOps {
       // Streamed side range-partitioned by vec_id (see normedRanged): the
       // broadcast side holds EVERY b row, so each a_id's full candidate set
       // lives in a_id's partition and partitions cover contiguous a_id
-      // ranges. A per-partition sort on (a_id, b_id) therefore IS the global
-      // output order — the r21 shape's two extra exchanges (hash
-      // materialization boundary + range sort, whose sampling re-executed the
-      // post-join stage) both disappear, and the O(n²) join runs wide instead
-      // of on the scan's single input split.
+      // ranges. The final orderBy on (a_id, b_id) reuses that exchange and
+      // sorts within each partition — the r21 shape's two extra exchanges
+      // (hash materialization boundary + range sort, whose sampling
+      // re-executed the post-join stage) both disappear, and the O(n²) join
+      // runs wide instead of on the scan's single input split.
       val (a, b) = pairSides(s, d)
       a.join(broadcast(b), col("a_id") < col("b_id"))
         .withColumn("sim", cosine)
         .filter(col("sim") >= 0.4)
         .select(col("a_id"), col("b_id"))
-        .sortWithinPartitions(col("a_id"), col("b_id"))
+        .orderBy(col("a_id"), col("b_id"))
     },
     Some(s"""
       WITH $normedSqlCte
@@ -205,11 +207,10 @@ object SimilarityOps {
     * limit could cap it; the aggregate holds exactly 3 entries per key with
     * the identical (sim DESC, b_id ASC) order — no sort of the candidate
     * stream anywhere in the plan. The streamed side's vec_id range exchange
-    * (see normedRanged) already clusters a_id, so the aggregate adds no
-    * exchange, and a post-aggregate in-partition sort on a_id (2 000 rows at
-    * bench scale, n rows generally — never the n² stream) plus order-
-    * preserving posexplode yields the exact global (a_id, rank) output order
-    * with zero further exchanges.
+    * (see normedRanged) already clusters a_id, so neither the aggregate nor
+    * the final orderBy on (a_id, rank) adds an exchange: that sort runs
+    * within each partition over the exploded top-k rows (3n rows, never the
+    * n² stream).
     */
   val qCosineTopK: QuerySpec = QuerySpec(
     "q43_cosine_topk",
@@ -231,9 +232,9 @@ object SimilarityOps {
         )
         .groupBy(col("a_id"))
         .agg(topKIds(col("sim"), col("b_id"), 3).as("nbrs"))
-        .sortWithinPartitions(col("a_id"))
         .select(col("a_id"), posexplode(col("nbrs")).as(Seq("pos", "neighbor_id")))
         .select(col("a_id"), (col("pos") + lit(1)).as("rank"), col("neighbor_id"))
+        .orderBy(col("a_id"), col("rank"))
     },
     Some(s"""
       WITH $normedSqlCte,

@@ -77,22 +77,20 @@ object TextOps {
   private def docTokens(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d).select(col("doc_id"), toks(Whitespace).as("toks"))
 
-  /** documents with the global doc_id order established at the SCAN, before
-    * any expensive projection. A trailing `.orderBy(doc_id)` above a heavy
-    * projection makes the range partitioner's sampling pass execute the whole
-    * projection twice (guide §1.2/§2.4 — Exchange placement): the child of a
-    * range exchange is computed once to sample partition bounds and again to
-    * shuffle. Range-exchanging the narrow (doc_id, text) scan output and
-    * sorting within partitions gives the identical global order (range
-    * partitions are contiguous and ordered; projections preserve row order)
-    * for one execution of the projection and zero extra exchanges.
+  /** documents range-exchanged on doc_id at the SCAN, before any expensive
+    * projection, for the queries ordered by doc_id. Their final
+    * `.orderBy(doc_id)` reuses this exchange and sorts within each partition.
+    * A range exchange of the sort's own, above a heavy projection, would make
+    * its sampling pass execute the whole projection twice (guide §1.2/§2.4 —
+    * Exchange placement): the child of a range exchange is computed once to
+    * sample partition bounds and again to shuffle.
     */
-  private def docsByIdSorted(s: SparkSession, d: String): DataFrame =
+  private def docsRanged(s: SparkSession, d: String): DataFrame =
     // Pinned partition count: without it AQE coalesces this small range
     // shuffle to ONE partition and every projection above it (q31/q32's
     // regex batteries, q33's md5, q35's signature, q39's double tokenization)
     // runs serial — see Tables.shufflePartitions.
-    Tables.rangeClustered(Tables.documents(s, d), col("doc_id")).sortWithinPartitions("doc_id")
+    Tables.rangeClustered(Tables.documents(s, d), col("doc_id"))
 
   /** Per-doc DISTINCT shingle set carried as one array column, over any
     * documents-shaped frame. `array_distinct` dedups inside the row, so the
@@ -166,7 +164,7 @@ object TextOps {
   val qDocQuality: QuerySpec = QuerySpec(
     "q31_doc_quality",
     (s, d) =>
-      docsByIdSorted(s, d)
+      docsRanged(s, d)
         .select(
           col("doc_id"),
           length(col("text")).cast("long").as("n_chars_calc"),
@@ -184,7 +182,8 @@ object TextOps {
               (lit(1.0) - col("n_punct") / nullif(col("n_chars_calc"), lit(0))),
             6,
           ),
-        ),
+        )
+        .orderBy(col("doc_id")),
     Some(s"""
       SELECT doc_id, n_chars_calc, n_tokens, n_punct, n_stop,
              round(n_stop * 1.0 / nullif(n_tokens, 0), 6) AS stop_ratio,
@@ -205,7 +204,7 @@ object TextOps {
   val qLangId: QuerySpec = QuerySpec(
     "q32_lang_id",
     (s, d) =>
-      docsByIdSorted(s, d)
+      docsRanged(s, d)
         .select(
           col("doc_id"),
           col("lang"),
@@ -219,7 +218,8 @@ object TextOps {
             .when(col("es_score") >= col("fr_score"), "es")
             .otherwise("fr"),
         )
-        .withColumn("is_match", col("lang_pred") === col("lang")),
+        .withColumn("is_match", col("lang_pred") === col("lang"))
+        .orderBy(col("doc_id")),
     Some(s"""
       SELECT doc_id, lang, en_score, es_score, fr_score, lang_pred, lang_pred = lang AS is_match
       FROM (SELECT *,
@@ -241,8 +241,9 @@ object TextOps {
   val qFingerprint: QuerySpec = QuerySpec(
     "q33_doc_fingerprint",
     (s, d) =>
-      docsByIdSorted(s, d)
-        .select(col("doc_id"), fingerprint.as("fp")),
+      docsRanged(s, d)
+        .select(col("doc_id"), fingerprint.as("fp"))
+        .orderBy(col("doc_id")),
     Some(s"""
       SELECT doc_id, $fingerprintSql AS fp
       FROM documents
@@ -301,15 +302,15 @@ object TextOps {
 
   val qMinhashSig: QuerySpec = QuerySpec(
     "q35_minhash_signature",
-    // Global doc_id order comes from docsByIdSorted's range exchange on the
-    // narrow scan, BELOW the signature projection: an orderBy above it would
+    // The final orderBy reuses docsRanged's range exchange on the narrow
+    // scan, BELOW the signature projection: a range exchange above it would
     // make the range partitioner's sampling pass execute the 8×md5 signature
     // twice per run (the r18 "q35 warm 41.8 s vs superset q36 7.1 s"
     // anomaly). The shingle pipeline's rlike gate pushes below the exchange
     // to the scan. The pinned count matters most here: an AQE-coalesced
     // single partition would run the signature serially (measured ~1.2 s of
     // q35's 1.6 s at bench scale).
-    (s, d) => minhashSig(docsByIdSorted(s, d)),
+    (s, d) => minhashSig(docsRanged(s, d)).orderBy(col("doc_id")),
     Some(s"""
       WITH $shingleSqlCte
       SELECT doc_id,
@@ -512,13 +513,14 @@ object TextOps {
   val qTokenCount: QuerySpec = QuerySpec(
     "q39_token_count",
     (s, d) =>
-      docsByIdSorted(s, d)
+      docsRanged(s, d)
         .select(
           col("doc_id"),
           size(toks(Whitespace)).cast("long").as("n_ws_tokens"),
           size(toks(WordSep)).cast("long").as("n_word_tokens"),
           ceil(length(col("text")) / lit(4.0)).cast("long").as("n_bpe_est"),
-        ),
+        )
+        .orderBy(col("doc_id")),
     Some(s"""
       SELECT doc_id,
              len(${toksSql(Whitespace)}) AS n_ws_tokens,

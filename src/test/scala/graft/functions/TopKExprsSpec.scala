@@ -14,14 +14,15 @@ import graft.SparkSpec
   * reference it must be indistinguishable from: `row_number() OVER
   * (PARTITION BY key ORDER BY score DESC, id ASC) <= k`, including exact
   * tie-breaks, NaN ordering (greater than everything, NaNs mutually equal),
-  * and partial/merge equivalence across partitionings.
+  * null scores (after every non-null one), and partial/merge equivalence
+  * across partitionings.
   */
 class TopKExprsSpec extends SparkSpec {
 
   private val schema = StructType(
     Seq(
       StructField("key", LongType, nullable = false),
-      StructField("score", DoubleType, nullable = false),
+      StructField("score", DoubleType, nullable = true),
       StructField("id", LongType, nullable = false),
     ),
   )
@@ -68,11 +69,12 @@ class TopKExprsSpec extends SparkSpec {
   test("aggregate equals the row_number window reference on random groups") {
     import scala.jdk.CollectionConverters._
     // Scores are drawn mostly from a few values, so ties are common, and
-    // include NaN; a group may hold fewer rows than k, or none at all.
+    // include NaN and null; a group may hold fewer rows than k, or none at all.
     val score = Gen.frequency(
       5 -> Gen.oneOf(-1.0, 0.0, 0.5, 1.0),
       3 -> Gen.choose(-2.0, 2.0),
       2 -> Gen.const(Double.NaN),
+      4 -> Gen.const(null),
     )
     val cases = for {
       k      <- Gen.choose(1, 5)
@@ -100,7 +102,7 @@ class TopKExprsSpec extends SparkSpec {
         .toSeq
       got == expected
     }
-    val result = Check.check(Check.Parameters.default.withMinSuccessfulTests(6).withWorkers(1), prop)
+    val result = Check.check(Check.Parameters.default.withMinSuccessfulTests(10).withWorkers(1), prop)
     assert(result.passed, result.status)
   }
 
@@ -164,5 +166,16 @@ class TopKExprsSpec extends SparkSpec {
     b3.insert(Double.NaN, 5L)
     b3.insert(1.0, 4L)
     assert(b3.ids.take(b3.n).toSeq == Seq(5L, 4L)) // NaN ranks first
+
+    // a null score ranks after every non-null one, ties on id, and keeps
+    // its flag through serialization
+    b3.insert(0.0, 7L, isNull = true)
+    b3.insert(0.0, 6L, isNull = true)
+    assert(b3.ids.take(b3.n).toSeq == Seq(5L, 4L, 6L))
+    val b4 = agg.deserialize(agg.serialize(b3))
+    assert(b4.ids.take(b4.n).toSeq == Seq(5L, 4L, 6L))
+    assert(b4.nulls.take(b4.n).toSeq == Seq(false, false, true))
+    b4.insert(-5.0, 8L)
+    assert(b4.ids.take(b4.n).toSeq == Seq(5L, 4L, 8L))
   }
 }

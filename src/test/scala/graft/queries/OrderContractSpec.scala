@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.TestListenerBus
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit, LocalLimit, LogicalPlan, Project, Sort}
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning, RangePartitioning}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
@@ -10,25 +11,23 @@ import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
 import graft.SparkSpec
 import graft.SparkEntry
 
-/** Order-sensitivity regression guard (r21 ADVICE): every query that carries
-  * its global output order PHYSICALLY — range exchange + in-partition sort
-  * surviving projections/aggregates/coalesce(1) instead of a logical trailing
-  * Sort — is asserted here against its declared ORDER BY contract, on real
-  * testdata, through the same `coalesce(1)` funnel the Verify dump uses. A
-  * future operator insertion (a rebalance, a different write path, an AQE
-  * behavior change) that breaks the physical-order assumption fails here
-  * before it silently fails the driver's hash compare.
+/** Order contracts. Every query whose oracle ends in `ORDER BY` declares
+  * that order as a global Sort at the root of its plan, with only projections
+  * and limits above it. The queries whose sort reuses a range exchange placed
+  * below their heavy projections (q10, q16, q31–q33, q35, q39, q40, q42,
+  * q43) are run on real testdata, through the same `coalesce(1)` funnel the
+  * Verify dump uses, and their rows checked against the declared order, at
+  * the shared session's partition count and at 1 and 7.
   *
   * Uses sf0.01 rather than the smallest SF so multi-row, multi-partition
   * shapes are actually exercised (sf0.001 leaves several outputs at 0–1
   * rows).
   *
-  * The contracts are checked again at 1 and 7 shuffle partitions. It also
-  * pins the exchanges behind the order: the bounded outputs sorted in one
-  * partition carry no range exchange, and a pinned range exchange takes its
-  * partition count from the session conf. The windowed event queries read
-  * their anchor with no join, and the warm job counts of the windowed and
-  * detection queries are pinned.
+  * It also pins the exchanges behind the order: the bounded outputs sorted
+  * in one partition carry no range exchange, and a pinned range exchange
+  * takes its partition count from the session conf. The windowed event
+  * queries read their anchor with no join, and the warm job counts of the
+  * windowed and detection queries are pinned.
   */
 class OrderContractSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
@@ -158,6 +157,30 @@ class OrderContractSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       name -> (build, jobs(noop(df)))
     }
     assert(counts == expected)
+  }
+
+  /** An oracle whose statement ends in `ORDER BY …`, perhaps with a `LIMIT`,
+    * outside every parenthesis (so not a CTE's or a window's).
+    */
+  private val endsOrdered = """(?is).*\bORDER BY\s[^()]*""".r
+
+  test("every query whose oracle ends in ORDER BY declares it: a global Sort at the root of its analyzed plan") {
+    val ordered = SparkEntry.specs.filter(_.oracle.exists(endsOrdered.matches)).map(_.name)
+    assert(SparkEntry.specs.map(_.name).diff(ordered) == Seq("q6_forecast_revenue"))
+    // Only projections and limits may sit above the Sort: neither moves a row.
+    def root(p: LogicalPlan): LogicalPlan = p match {
+      case Project(_, c)     => root(c)
+      case GlobalLimit(_, c) => root(c)
+      case LocalLimit(_, c)  => root(c)
+      case other             => other
+    }
+    val undeclared = ordered.filterNot { name =>
+      root(SparkEntry.queries(name)(spark, sf).queryExecution.analyzed) match {
+        case s: Sort => s.global
+        case _       => false
+      }
+    }
+    assert(undeclared.isEmpty, "have no global Sort at the root")
   }
 
   test("q16's pinned range exchange takes the session's shuffle partition count") {
